@@ -75,7 +75,8 @@ final class Bench(a: Args) extends AutoCloseable {
 
   private var spark: SparkSession = _
   private var listener: TaskListener = _
-  private var setupS = 0.0
+  private var sessionRawNs = 0L
+  private var stepsS = 0.0
   private var bytesWritten = 0L
   private var userBytes = 0L
 
@@ -103,8 +104,11 @@ final class Bench(a: Args) extends AutoCloseable {
 
   // ---------------------------------------------------------------- session
 
-  private def startSession(): Double = {
-    val p = probeAll()
+  /** Starts the session; its raw time is normalized in `result()` by the
+    * run's median all-core probe. A probe just before it runs in a JVM with
+    * no Spark threads yet and reads faster than any later probe, so it would
+    * inflate the normalized figure and its spread. */
+  private def startSession(): Unit = {
     val t0 = System.nanoTime()
     spark = SparkSession.builder()
       .master(s"local[${a.threads}]")
@@ -124,7 +128,7 @@ final class Bench(a: Args) extends AutoCloseable {
       spark.sparkContext.addSparkListener(listener)
     }
     side("setup.session_raw_s") = raw / 1e9
-    raw * refAllNs / p / 1e9
+    sessionRawNs = raw
   }
 
   private def sc = spark.sparkContext
@@ -260,8 +264,10 @@ final class Bench(a: Args) extends AutoCloseable {
 
   // -------------------------------------------------------------- set-up
 
-  /** Builds one index; returns the build's normalized seconds. */
-  private def build(uri: String, df: DataFrame, indexType: String, rowBytes: Long): Double = {
+  /** Builds one index; returns the build's normalized seconds. Only an
+    * `accounted` build counts towards `write_amp`. */
+  private def build(uri: String, df: DataFrame, indexType: String, rowBytes: Long,
+      accounted: Boolean = true): Double = {
     val dir = Paths.get(uri)
     val before = FileTree.list(dir)
     val w0 = work()
@@ -269,8 +275,10 @@ final class Bench(a: Args) extends AutoCloseable {
       Ingest.ingest(spark, uri, df, indexType, DistanceMetric.L2, timestamp = BaseTs)
     }
     val w = work() - w0
-    bytesWritten += FileTree.written(before, FileTree.list(dir))
-    userBytes += rowBytes
+    if (accounted) {
+      bytesWritten += FileTree.written(before, FileTree.list(dir))
+      userBytes += rowBytes
+    }
     verdict(s"build $indexType", checkSparkBusy(t))
     note("build.s", t.normNs / 1e9)
     note(s"build.$indexType.s", t.normNs / 1e9)
@@ -290,12 +298,8 @@ final class Bench(a: Args) extends AutoCloseable {
   }
 
   /** Set-up time: session start plus every build and snapshot, each at the
-    * reference host speed. */
-  private def setup(session: Double)(steps: => Double): Unit = {
-    setupS = session + steps
-    side("setup.session_s") = session
-    side("setup.steps_s") = setupS - session
-  }
+    * reference host speed; the session part is added in `result()`. */
+  private def setup(steps: => Double): Unit = stepsS = steps
 
   private def corpus(n: Int): (Corpus, IndexedSeq[(Long, Array[Float])]) = {
     val c = new Corpus(gen.dims)
@@ -312,11 +316,11 @@ final class Bench(a: Args) extends AutoCloseable {
     val (c, rows) = corpus(BatchCorpus)
     val queries = gen.stream(Gen.QueryStream)
     side("bench.gen_s") = (System.nanoTime() - t0) / 1e9
-    val session = startSession()
+    startSession()
     val df = vectorsDf(rows, a.threads)
     val rowBytes = rows.length.toLong * gen.dims * 4
     val uris = BatchTypes.map(t => t -> runDir.resolve(s"batch/$t").toString).toMap
-    setup(session)(BatchTypes.map(t => build(uris(t), df, t, rowBytes)).sum)
+    setup(BatchTypes.map(t => build(uris(t), df, t, rowBytes)).sum)
 
     val done = ArrayBuffer.empty[(String, IndexedSeq[Array[Float]], IndexedSeq[Seq[Hit]], Boolean)]
     def one(t: String, counted: Boolean): Unit = {
@@ -329,7 +333,7 @@ final class Bench(a: Args) extends AutoCloseable {
     val gc0 = gcMs()
     val end = System.nanoTime() + a.seconds * 1000000000L
     var i = 0
-    while (System.nanoTime() < end || i % BatchTypes.length != 0) {
+    while (System.nanoTime() < end || i < BatchMinRounds * BatchTypes.length) {
       one(BatchTypes(i % BatchTypes.length), counted = true)
       i += 1
     }
@@ -359,18 +363,40 @@ final class Bench(a: Args) extends AutoCloseable {
     val fresh = gen.stream(Gen.UpsertStream)
     val choice = new java.util.Random(a.seed * 31 + Gen.ChoiceStream)
     side("bench.gen_s") = (System.nanoTime() - t0) / 1e9
-    val session = startSession()
+    startSession()
     val df = vectorsDf(rows, a.threads)
     val rowBytes = rows.length.toLong * gen.dims * 4
-    val uri = runDir.resolve("update/IVF_FLAT").toString
+    // the one build of this set-up is repeated and its median counts; the
+    // workload runs on the first, the only one in `write_amp`
+    val uris = (0 until UpdateBuilds).map(i => runDir.resolve(s"update/IVF_FLAT-$i").toString)
+    setup(Probe.median(uris.zipWithIndex.map { case (u, i) =>
+      build(u, df, "IVF_FLAT", rowBytes, accounted = i == 0)
+    }))
+    val uri = uris.head
     val dir = Paths.get(uri)
-    setup(session)(build(uri, df, "IVF_FLAT", rowBytes))
 
     val deleted = mutable.HashSet.empty[Long]
     var nextId = UpdateCorpus.toLong // ids below are the corpus
     var ts = BaseTs
     val cycles = ArrayBuffer.empty[Map[String, Double]]
     var cycleBytes = 0L
+
+    /** One checked k-NN read: fresh queries plus self-queries of `selfIds`. */
+    def read(selfIds: Seq[Long], counted: Boolean): Timed[_] = {
+      val qs = queries.take(UpdateQueries - selfIds.length).toIndexedSeq ++ selfIds.map(c.vector)
+      val rt = sparkQuery("read", uri, qs, counted)
+      val truth = c.topKAll(qs.take(UpdateQueries - selfIds.length), K, a.threads)
+      val issues = ArrayBuffer.empty[String] ++ checkSparkBusy(rt)
+      qs.indices.foreach { qi =>
+        val h = rt.value(qi)
+        issues ++= Checks.wellFormed(h, K)
+        issues ++= Checks.noneDeleted(h, deleted)
+        if (qi < truth.length) recalls.getOrElseUpdate("IVF_FLAT", ArrayBuffer.empty) += Checks.recall(h, truth(qi))
+        else issues ++= Checks.selfFirst(h, selfIds(qi - truth.length))
+      }
+      verdict("read after write", issues.toSeq)
+      rt
+    }
 
     def round(counted: Boolean): Unit = {
       ts += 10
@@ -395,19 +421,7 @@ final class Bench(a: Args) extends AutoCloseable {
       verdict("upsert", checkSparkBusy(wt))
 
       // read: fresh queries plus self-queries of vectors just written
-      val selfIds = newIds.take(SelfQueries / 2) ++ over.take(SelfQueries / 2)
-      val qs = queries.take(UpdateQueries - SelfQueries).toIndexedSeq ++ selfIds.map(c.vector)
-      val rt = sparkQuery("read", uri, qs, counted)
-      val truth = c.topKAll(qs.take(UpdateQueries - SelfQueries), K, a.threads)
-      val issues = ArrayBuffer.empty[String] ++ checkSparkBusy(rt)
-      qs.indices.foreach { qi =>
-        val h = rt.value(qi)
-        issues ++= Checks.wellFormed(h, K)
-        issues ++= Checks.noneDeleted(h, deleted)
-        if (qi < truth.length) recalls.getOrElseUpdate("IVF_FLAT", ArrayBuffer.empty) += Checks.recall(h, truth(qi))
-        else issues ++= Checks.selfFirst(h, selfIds(qi - truth.length))
-      }
-      verdict("read after write", issues.toSeq)
+      read(newIds.take(SelfQueries / 2) ++ over.take(SelfQueries / 2), counted)
       if (counted) {
         record("upsert", wt)
         note("upsert.jobs", ww.jobs.toDouble)
@@ -447,20 +461,26 @@ final class Bench(a: Args) extends AutoCloseable {
       }
     }
 
+    // The writes follow a fixed schedule, not the clock: the log and the
+    // index grow with every round, so a time-bound schedule would make
+    // `write_amp`, the read latency and the storage figures depend on how
+    // many rounds fit the window. `--seconds` only extends the window with
+    // reads of the final state, which no gated figure includes.
     for (_ <- 0 until UpdateWarmup) round(counted = false)
     System.gc()
     val gc0 = gcMs()
     val end = System.nanoTime() + a.seconds * 1000000000L
-    var r = 0
-    while (System.nanoTime() < end || r < MaintainEvery) {
+    (1 to UpdateRounds).foreach { r =>
       round(counted = true)
-      r += 1
       if (r % MaintainEvery == 0) maintain(counted = true)
     }
     note("jvm.gc_ms", gcMs() - gc0)
     side("ingest_update.cycles") = cycles.toSeq
-    side("ingest_update.rounds") = r
+    side("ingest_update.rounds") = UpdateRounds
     note("space_amp", FileTree.bytes(dir).toDouble / (c.size.toLong * gen.dims * 4))
+    val settled = ArrayBuffer.empty[Double]
+    while (System.nanoTime() < end) settled += read(Nil, counted = false).normNs / 1e6
+    side("ingest_update.settled_read_ms") = settled.toSeq
 
     // a fresh session sees exactly the live ids on disk
     val fresh2 = spark.newSession()
@@ -477,11 +497,11 @@ final class Bench(a: Args) extends AutoCloseable {
     val (c, rows) = corpus(ServeCorpus)
     val queries = gen.stream(Gen.QueryStream)
     side("bench.gen_s") = (System.nanoTime() - t0) / 1e9
-    val session = startSession()
+    startSession()
     val df = vectorsDf(rows, a.threads)
     val rowBytes = rows.length.toLong * gen.dims * 4
     val searchers = mutable.LinkedHashMap.empty[String, (String, LocalSearcher)]
-    setup(session)(ServeTypes.map { t =>
+    setup(ServeTypes.map { t =>
       val uri = runDir.resolve(s"serve/$t").toString
       val b = build(uri, df, t, rowBytes)
       val (s, snap) = snapshot(uri, t)
@@ -550,6 +570,10 @@ final class Bench(a: Args) extends AutoCloseable {
   // ----------------------------------------------------------------- output
 
   private def result(): String = {
+    val sessionS = sessionRawNs * refAllNs / Probe.median(probes("all").toSeq) / 1e9
+    val setupS = sessionS + stepsS
+    side("setup.session_s") = sessionS
+    side("setup.steps_s") = stepsS
     val kinds = samples.keys.toSeq
     def geo(xs: Seq[Double]) = math.exp(xs.map(math.log).sum / xs.length)
     val p50 = geo(kinds.map(kk => Probe.median(samples(kk).toSeq))) / 1e6
@@ -664,6 +688,7 @@ object Bench {
   val BatchTypes = IndexedSeq("FLAT", "IVF_FLAT", "IVF_PQ", "VAMANA")
   val BatchQueries = 64
   val BatchWarmup = 2
+  val BatchMinRounds = 3 // timed batches per index, at the least
 
   val UpdateCorpus = 5000
   val UpsertNew = 150
@@ -671,8 +696,10 @@ object Bench {
   val Deletes = 100
   val UpdateQueries = 64
   val SelfQueries = 8
-  val MaintainEvery = 4
-  val UpdateWarmup = 2
+  val UpdateRounds = 6
+  val MaintainEvery = 3
+  val UpdateWarmup = 1
+  val UpdateBuilds = 3
 
   val ServeCorpus = 5000
   val ServeTypes = IndexedSeq("IVF_FLAT", "FLAT")
@@ -681,6 +708,8 @@ object Bench {
   val ServeSparkChecks = 64
 
   /** Tail percentile of n samples: the highest with at least ten samples
-    * beyond it, between the median and p99. */
+    * beyond it, between the median and p99. Below 20 samples it is the
+    * median, so `tail_ms` equals `p50_ms` on the Spark workloads, whose
+    * kinds hold 2 to 6 samples a run. */
   def tailQ(n: Int): Double = math.min(0.99, math.max(0.5, 1.0 - 10.0 / n))
 }

@@ -5,14 +5,16 @@
 
 Builds the engine and the benchmark from source with sbt on first use (the
 build is cached in .bench_build/ and redone when a source file changes),
-then starts one JVM for the run. The JVM's last stdout line, one JSON
-object, is printed as this program's last line. Exits non-zero without a
-result when the build or the run fails.
+then starts the run's JVMs one after another (knn_batch runs in two, so
+that no single JVM's speed decides the run). The last JVM's last stdout
+line, one JSON object, is printed as this program's last line. Exits
+non-zero without a result when the build or the run fails.
 """
 import argparse
 import hashlib
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -22,10 +24,11 @@ ROOT = os.getcwd()
 OUT = os.path.join(ROOT, ".bench_build")
 LAUNCH = os.path.join(OUT, "launch.txt")
 STAMP = os.path.join(OUT, "launch.sha256")
-WORKLOADS = ("knn_batch", "ingest_update", "knn_serve")
+# JVMs per run, by workload
+WORKLOADS = {"knn_batch": 2, "ingest_update": 1}
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 850
-HEAP = "3g"
+HEAP = "2g"
 
 
 def fail(msg):
@@ -81,9 +84,23 @@ def build():
     print(f"vsbench: built in {time.time() - t0:.0f} s", file=sys.stderr)
 
 
+def run_jvm(cmd, log_path, deadline):
+    """Runs one JVM to its end; returns (exit code, stdout)."""
+    with open(log_path, "w") as log:
+        proc = subprocess.Popen(cmd, cwd=ROOT, stdin=subprocess.DEVNULL,
+                                stdout=subprocess.PIPE, stderr=log, text=True)
+        try:
+            out, _ = proc.communicate(timeout=max(1.0, deadline - time.time()))
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+            return None, ""
+    return proc.returncode, out
+
+
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -99,27 +116,32 @@ def main():
     name = f"{a.workload}-seed{a.seed}-trace{a.trace}"
     logs = os.path.join(OUT, "logs")
     os.makedirs(logs, exist_ok=True)
-    cmd = ["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch", *opts, "-cp", cp, "vsbench.Main",
-           "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-           "--trace", str(a.trace), "--threads", str(threads),
-           "--work", os.path.join(OUT, "work"), "--out", os.path.join(OUT, "results"),
-           "--ref-all-ms", str(ref["probe_all_ms"]), "--ref-single-us", str(ref["probe_single_us"])]
-    with open(os.path.join(logs, name + ".log"), "w") as log:
-        proc = subprocess.Popen(cmd, cwd=ROOT, stdin=subprocess.DEVNULL,
-                                stdout=subprocess.PIPE, stderr=log, text=True)
-        try:
-            out, _ = proc.communicate(timeout=RUN_TIMEOUT_S)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait()
-            fail(f"run timed out after {RUN_TIMEOUT_S} s; see .bench_build/logs/{name}.log")
-    with open(os.path.join(logs, name + ".log")) as fh:
+    work = os.path.join(OUT, "work", f"run-{os.getpid()}")
+    jvms = WORKLOADS[a.workload]
+    deadline = time.time() + RUN_TIMEOUT_S
+    try:
+        for j in range(jvms):
+            cmd = ["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch", *opts, "-cp", cp,
+                   "vsbench.Main", "--workload", a.workload, "--seed", str(a.seed),
+                   "--seconds", str(a.seconds), "--trace", str(a.trace), "--threads", str(threads),
+                   "--jvm", str(j), "--jvms", str(jvms), "--work", work,
+                   "--out", os.path.join(OUT, "results"),
+                   "--ref-single-us", str(ref["probe_single_us"])]
+            log_path = os.path.join(logs, f"{name}-jvm{j}.log")
+            code, out = run_jvm(cmd, log_path, deadline)
+            if code is None:
+                fail(f"run timed out after {RUN_TIMEOUT_S} s; see {os.path.relpath(log_path, ROOT)}")
+            if code != 0:
+                fail(f"run failed (exit {code}); see {os.path.relpath(log_path, ROOT)}")
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    with open(log_path) as fh:
         summary = [ln for ln in fh.read().splitlines() if ln.startswith("vsbench ")]
     for ln in summary:
         print(ln, file=sys.stderr)
     lines = [ln for ln in out.splitlines() if ln.strip()]
-    if proc.returncode != 0 or not lines:
-        fail(f"run failed (exit {proc.returncode}); see .bench_build/logs/{name}.log")
+    if not lines:
+        fail(f"run printed no result; see {os.path.relpath(log_path, ROOT)}")
     result = json.loads(lines[-1])
     print(json.dumps(result))
 

@@ -54,6 +54,8 @@ object Gen {
   val QueryStream = 2
   val UpsertStream = 3
   val ChoiceStream = 4
+  /** Stream-id offset between the JVMs of one run, so none repeats a query. */
+  val JvmStride = 100
 }
 
 /** One write of the update workload: new ids, overwrites of live ids, and

@@ -10,53 +10,60 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.VsbenchShims
 import org.json4s.{DefaultFormats, Extraction, Formats}
-import org.json4s.jackson.JsonMethods.{compact, render}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.index.{Ingest, LocalSearcher, VectorIndex}
 import graft.operators.DistanceMetric
 
-/** Command-line options; run.py supplies the paths and host reference. */
+/** Command-line options; run.py supplies the paths and host reference.
+  * A run may span several JVMs, started one after another (`jvm` of
+  * `jvms`): they share the run directory `work`, and the last one reports. */
 final case class Args(workload: String, seed: Long, seconds: Int, trace: Boolean,
-    work: Path, out: Path, refAllMs: Double, refSingleUs: Double, threads: Int)
+    work: Path, out: Path, refSingleUs: Double, threads: Int,
+    jvm: Int, jvms: Int)
 
 object Args {
   def parse(a: Array[String]): Args = {
     val m = a.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
     def need(k: String) = m.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
     Args(need("workload"), need("seed").toLong, need("seconds").toInt, need("trace") == "1",
-      Paths.get(need("work")), Paths.get(need("out")), need("ref-all-ms").toDouble,
-      need("ref-single-us").toDouble,
-      m.get("threads").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors))
+      Paths.get(need("work")), Paths.get(need("out")), need("ref-single-us").toDouble,
+      m.get("threads").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors),
+      m.get("jvm").map(_.toInt).getOrElse(0), m.get("jvms").map(_.toInt).getOrElse(1))
   }
 }
 
-/** One timed operation: raw wall time, the adjacent host probe, and the
-  * wall time at the reference host speed. `busy` is set when Spark had work
-  * running around the probe, which would flatter the normalization. */
-final case class Timed[T](value: T, rawNs: Long, probeNs: Double, normNs: Double, busy: Boolean)
+/** One timed Spark-side operation: its wall time, and `busy` when a Spark
+  * job was running around the host probes just before it, that is, work of
+  * an earlier operation was still running when this one started. */
+final case class Timed[T](value: T, ns: Long, busy: Boolean)
 
 object Main {
   def main(argv: Array[String]): Unit = {
     val args = Args.parse(argv)
     val run = new Bench(args)
     val line = try run.run() finally run.close()
-    println(line)
+    line.foreach(println)
   }
 }
 
-/** The three workloads. Each is a closed loop with one client: set up, warm
-  * up, then issue requests for `seconds`, then check the outputs. */
+/** The two workloads. Each is a closed loop with one client: set up, warm
+  * up, then issue requests for `seconds`, then check the outputs. A run of
+  * several JVMs carries its samples and counts from one JVM to the next in
+  * the run directory; the last JVM pools them and reports. */
 final class Bench(a: Args) extends AutoCloseable {
   import Bench._
 
   private val gen = new Gen(a.seed)
   private val probe = new Probe(a.threads)
   private val spans = new Spans(a.trace)
-  private val refAllNs = a.refAllMs * 1e6
   private val refSingleNs = a.refSingleUs * 1e3
-  private val runDir = a.work.resolve(s"run-${ProcessHandle.current().pid()}")
+  private val runDir = a.work
+  private val carryFile = runDir.resolve("carry.json")
+  private val first = a.jvm == 0
+  private val last = a.jvm == a.jvms - 1
 
   private var attempted = 0L
   private var failed = 0L
@@ -66,7 +73,11 @@ final class Bench(a: Args) extends AutoCloseable {
   /** Normalized samples per request kind, in ns, timed window only. */
   private val samples = mutable.LinkedHashMap.empty[String, ArrayBuffer[Double]]
   private val rawSamples = mutable.LinkedHashMap.empty[String, ArrayBuffer[Double]]
+  /** This JVM's Spark-side samples, normalized in `finish()`. */
+  private val sparkRaw = mutable.LinkedHashMap.empty[String, ArrayBuffer[Double]]
+  /** This JVM's probes; `priorProbes` are those of the run's earlier JVMs. */
   private val probes = mutable.LinkedHashMap.empty[String, ArrayBuffer[Double]]
+  private val priorProbes = mutable.LinkedHashMap.empty[String, ArrayBuffer[Double]]
   /** Per-layer observations (trace run). */
   private val layer = mutable.LinkedHashMap.empty[String, ArrayBuffer[Double]]
   /** Everything else the side output records. */
@@ -75,7 +86,10 @@ final class Bench(a: Args) extends AutoCloseable {
 
   private var spark: SparkSession = _
   private var listener: TaskListener = _
-  private var sessionRawNs = 0L
+  /** Session start of every JVM of the run, at the reference host speed. */
+  private val sessions = ArrayBuffer.empty[Double]
+  private var sessionRawS = 0.0
+  private var stepsRawS = 0.0
   private var stepsS = 0.0
   private var bytesWritten = 0L
   private var userBytes = 0L
@@ -86,20 +100,89 @@ final class Bench(a: Args) extends AutoCloseable {
   def close(): Unit = {
     probe.close()
     if (spark != null) spark.stop()
-    deleteTree(runDir)
+    if (last) deleteTree(runDir)
   }
 
-  def run(): String = {
+  /** Runs this JVM's part; the last JVM of the run returns the result line. */
+  def run(): Option[String] = {
     Files.createDirectories(runDir)
+    if (!first) loadCarry()
     val t0 = System.nanoTime()
     a.workload match {
       case "knn_batch" => knnBatch()
       case "ingest_update" => ingestUpdate()
-      case "knn_serve" => knnServe()
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
     side("bench.total_s") = (System.nanoTime() - t0) / 1e9
-    result()
+    finish()
+    if (last) Some(result()) else { saveCarry(); None }
+  }
+
+  private val name = s"${a.workload}-seed${a.seed}-trace${if (a.trace) 1 else 0}"
+
+  /** Takes this JVM's Spark-side figures to the reference host speed by
+    * the median of the driver-thread probes taken before its Spark
+    * operations, notes its probe medians and writes its spans. The driver
+    * thread plans, schedules and collects every Spark request, and its vCPU
+    * is fast or slow for a whole JVM; one probe per operation is too noisy
+    * to normalize that operation alone, while the JVM's median follows the
+    * driver's speed. */
+  private def finish(): Unit = {
+    val scale = refSingleNs / Probe.median(probes("single").toSeq)
+    sparkRaw.foreach { case (kk, raw) =>
+      samples.getOrElseUpdate(kk, ArrayBuffer.empty) ++= raw.map(_ * scale)
+      rawSamples.getOrElseUpdate(kk, ArrayBuffer.empty) ++= raw
+    }
+    sessions += sessionRawS * scale
+    if (first) stepsS = stepsRawS * scale
+    side(s"jvm${a.jvm}.setup.session_raw_s") = sessionRawS
+    side(s"jvm${a.jvm}.setup.steps_raw_s") = stepsRawS
+    probes.foreach { case (kk, p) => side(s"jvm${a.jvm}.probe.$kk.median_ms") = Probe.median(p.toSeq) / 1e6 }
+    side(s"jvm${a.jvm}.spans") = spans.count
+    spans.write(a.out.resolve(s"$name-jvm${a.jvm}.spans.jsonl"))
+  }
+
+  /** What the next JVM of the run needs to pool with its own figures. */
+  private def saveCarry(): Unit = {
+    val all = probes.map { case (k, v) => k -> (priorProbes.getOrElse(k, ArrayBuffer.empty) ++ v).toSeq }
+    val carry = ListMap(
+      "attempted" -> attempted, "failed" -> failed, "problems" -> problems.toSeq,
+      "samples" -> samples.map { case (k, v) => k -> v.toSeq }.toMap,
+      "raw_samples" -> rawSamples.map { case (k, v) => k -> v.toSeq }.toMap,
+      "probes" -> all.toMap,
+      "layer" -> layer.map { case (k, v) => k -> v.toSeq }.toMap,
+      "recalls" -> recalls.map { case (k, v) => k -> v.toSeq }.toMap,
+      "sessions" -> sessions.toSeq, "steps_s" -> stepsS,
+      "bytes_written" -> bytesWritten, "user_bytes" -> userBytes,
+      "side" -> side.toMap)
+    Files.write(carryFile, json(carry).getBytes("UTF-8"))
+  }
+
+  private def loadCarry(): Unit = {
+    implicit val formats: Formats = DefaultFormats
+    val j = parse(new String(Files.readAllBytes(carryFile), "UTF-8"))
+    def series(key: String, into: mutable.Map[String, ArrayBuffer[Double]]): Unit =
+      (j \ key).extract[Map[String, Seq[Double]]].foreach { case (k, v) =>
+        into.getOrElseUpdate(k, ArrayBuffer.empty) ++= v
+      }
+    attempted += (j \ "attempted").extract[Long]
+    failed += (j \ "failed").extract[Long]
+    problems ++= (j \ "problems").extract[Seq[String]]
+    series("samples", samples)
+    series("raw_samples", rawSamples)
+    series("probes", priorProbes)
+    series("layer", layer)
+    series("recalls", recalls)
+    sessions ++= (j \ "sessions").extract[Seq[Double]]
+    stepsS = (j \ "steps_s").extract[Double]
+    bytesWritten += (j \ "bytes_written").extract[Long]
+    userBytes += (j \ "user_bytes").extract[Long]
+    (j \ "side").values match {
+      case m: Map[_, _] => m.foreach { case (k, v) =>
+        side(if (k.toString.startsWith("jvm")) k.toString else s"jvm${a.jvm - 1}.$k") = v
+      }
+      case _ =>
+    }
   }
 
   // ---------------------------------------------------------------- session
@@ -127,8 +210,7 @@ final class Bench(a: Args) extends AutoCloseable {
       listener = new TaskListener
       spark.sparkContext.addSparkListener(listener)
     }
-    side("setup.session_raw_s") = raw / 1e9
-    sessionRawNs = raw
+    sessionRawS = raw / 1e9
   }
 
   private def sc = spark.sparkContext
@@ -145,28 +227,27 @@ final class Bench(a: Args) extends AutoCloseable {
     p
   }
 
-  private def probeSingle(): Double = {
+  /** One probe on this thread, recorded under `kind`. */
+  private def probeSingle(kind: String): Double = {
     val p = probe.single().toDouble
-    probes.getOrElseUpdate("single", ArrayBuffer.empty) += p
+    probes.getOrElseUpdate(kind, ArrayBuffer.empty) += p
     p
   }
 
-  /** Times a Spark-side operation at the reference host speed: waits for the
-    * listener bus, asserts no job is running, probes all cores, runs `f`. */
+  /** Times a Spark-side operation: waits for the listener bus, asserts no
+    * job is running, probes the driver thread and all cores, runs `f`. */
   private def sparkOp[T](req: Long, name: String)(f: => T): Timed[T] = {
     drain()
     val busyBefore = sc.statusTracker.getActiveJobIds.nonEmpty
-    val (p, _) = spans(req, "probe") { probeSingle(); probeAll() }
+    spans(req, "probe") { (0 until SparkProbes).foreach(_ => probeSingle("single")); probeAll() }
     drain()
     val busy = busyBefore || sc.statusTracker.getActiveJobIds.nonEmpty
     val (v, ns) = spans(req, name)(f)
-    Timed(v, ns, p, ns * refAllNs / p, busy)
+    Timed(v, ns, busy)
   }
 
-  private def record(kind: String, t: Timed[_]): Unit = {
-    samples.getOrElseUpdate(kind, ArrayBuffer.empty) += t.normNs
-    rawSamples.getOrElseUpdate(kind, ArrayBuffer.empty) += t.rawNs.toDouble
-  }
+  private def record(kind: String, t: Timed[_]): Unit =
+    sparkRaw.getOrElseUpdate(kind, ArrayBuffer.empty) += t.ns.toDouble
 
   private def note(key: String, v: Double): Unit =
     layer.getOrElseUpdate(key, ArrayBuffer.empty) += v
@@ -241,8 +322,7 @@ final class Bench(a: Args) extends AutoCloseable {
       record(kind, t)
       if (a.trace) {
         val all = work() - w0
-        val scale = refAllNs / t.probeNs / 1e6 // ns -> ms at reference speed
-        phase.foreach { case (p, ns) => note(s"$kind.$p.ms", ns * scale) }
+        phase.foreach { case (p, ns) => note(s"$kind.$p.ms", ns / 1e6) }
         note(s"$kind.construct.jobs", construct.jobs.toDouble)
         note(s"$kind.jobs", all.jobs.toDouble)
         note(s"$kind.tasks", all.tasks.toDouble)
@@ -264,10 +344,8 @@ final class Bench(a: Args) extends AutoCloseable {
 
   // -------------------------------------------------------------- set-up
 
-  /** Builds one index; returns the build's normalized seconds. Only an
-    * `accounted` build counts towards `write_amp`. */
-  private def build(uri: String, df: DataFrame, indexType: String, rowBytes: Long,
-      accounted: Boolean = true): Double = {
+  /** Builds one index; returns its wall time in seconds. */
+  private def build(uri: String, df: DataFrame, indexType: String, rowBytes: Long): Double = {
     val dir = Paths.get(uri)
     val before = FileTree.list(dir)
     val w0 = work()
@@ -275,16 +353,14 @@ final class Bench(a: Args) extends AutoCloseable {
       Ingest.ingest(spark, uri, df, indexType, DistanceMetric.L2, timestamp = BaseTs)
     }
     val w = work() - w0
-    if (accounted) {
-      bytesWritten += FileTree.written(before, FileTree.list(dir))
-      userBytes += rowBytes
-    }
+    bytesWritten += FileTree.written(before, FileTree.list(dir))
+    userBytes += rowBytes
     verdict(s"build $indexType", checkSparkBusy(t))
-    note("build.s", t.normNs / 1e9)
-    note(s"build.$indexType.s", t.normNs / 1e9)
+    note("build.s", t.ns / 1e9)
+    note(s"build.$indexType.s", t.ns / 1e9)
     note("build.jobs", w.jobs.toDouble)
     note("build.task_cpu_s", w.cpuNs / 1e9)
-    t.normNs / 1e9
+    t.ns / 1e9
   }
 
   private def snapshot(uri: String, kind: String): (LocalSearcher, Double) = {
@@ -292,14 +368,14 @@ final class Bench(a: Args) extends AutoCloseable {
     val t = sparkOp(nextReq(), s"snapshot.$kind")(VectorIndex.open(spark, uri).localSearcher())
     val w = work() - w0
     verdict(s"snapshot $kind", checkSparkBusy(t))
-    note("snapshot.s", t.normNs / 1e9)
+    note("snapshot.s", t.ns / 1e9)
     note("snapshot.jobs", w.jobs.toDouble)
-    (t.value, t.normNs / 1e9)
+    (t.value, t.ns / 1e9)
   }
 
-  /** Set-up time: session start plus every build and snapshot, each at the
-    * reference host speed; the session part is added in `result()`. */
-  private def setup(steps: => Double): Unit = stepsS = steps
+  /** Set-up time: session start plus every build and snapshot, in raw
+    * seconds; `finish()` takes it to the reference host speed. */
+  private def setup(steps: => Double): Unit = stepsRawS = steps
 
   private def corpus(n: Int): (Corpus, IndexedSeq[(Long, Array[Float])]) = {
     val c = new Corpus(gen.dims)
@@ -314,13 +390,21 @@ final class Bench(a: Args) extends AutoCloseable {
   private def knnBatch(): Unit = {
     val t0 = System.nanoTime()
     val (c, rows) = corpus(BatchCorpus)
-    val queries = gen.stream(Gen.QueryStream)
+    // every JVM of the run draws its own queries: no query repeats
+    val queries = gen.stream(Gen.QueryStream + Gen.JvmStride * a.jvm)
     side("bench.gen_s") = (System.nanoTime() - t0) / 1e9
     startSession()
-    val df = vectorsDf(rows, a.threads)
-    val rowBytes = rows.length.toLong * gen.dims * 4
     val uris = BatchTypes.map(t => t -> runDir.resolve(s"batch/$t").toString).toMap
-    setup(BatchTypes.map(t => build(uris(t), df, t, rowBytes)).sum)
+    // the first JVM builds, takes the snapshots and serves from them (its
+    // set-up is the run's); a later one reopens the indexes for more batches
+    val searchers = if (first) {
+      val df = vectorsDf(rows, a.threads)
+      val rowBytes = rows.length.toLong * gen.dims * 4
+      val builds = BatchTypes.map(t => build(uris(t), df, t, rowBytes)).sum
+      val snaps = ServeTypes.map(t => t -> snapshot(uris(t), t)).toMap
+      setup(builds + snaps.values.map(_._2).sum)
+      snaps
+    } else Map.empty[String, (LocalSearcher, Double)]
 
     val done = ArrayBuffer.empty[(String, IndexedSeq[Array[Float]], IndexedSeq[Seq[Hit]], Boolean)]
     def one(t: String, counted: Boolean): Unit = {
@@ -331,13 +415,17 @@ final class Bench(a: Args) extends AutoCloseable {
     for (_ <- 0 until BatchWarmup; t <- BatchTypes) one(t, counted = false)
     System.gc()
     val gc0 = gcMs()
-    val end = System.nanoTime() + a.seconds * 1000000000L
+    // two thirds of the window go to the batches, spread over the run's
+    // JVMs (BatchMinRounds usually takes longer), and a third to serving
+    val window = a.seconds * 1000000000L / 3
+    val end = System.nanoTime() + 2 * window / a.jvms
     var i = 0
     while (System.nanoTime() < end || i < BatchMinRounds * BatchTypes.length) {
       one(BatchTypes(i % BatchTypes.length), counted = true)
       i += 1
     }
     note("jvm.gc_ms", gcMs() - gc0)
+    if (searchers.nonEmpty) serve(c, queries, searchers.map { case (t, (s, _)) => t -> (uris(t), s) }, window)
 
     // checks against the exact answers, after the window
     val truth = c.topKAll(done.flatMap(_._2).toIndexedSeq, K, a.threads).iterator
@@ -354,6 +442,63 @@ final class Bench(a: Args) extends AutoCloseable {
     }
   }
 
+  /** Single-vector queries on in-process snapshots, alternating between
+    * them for `windowNs` after a warm-up; no Spark job runs per request.
+    * Each pair of requests is normalized by a single-thread probe on the
+    * serving thread just before it. Sampled answers are checked against the
+    * exact answer and against `VectorIndex.query` on the same index. */
+  private def serve(c: Corpus, queries: Iterator[Array[Float]],
+      searchers: Map[String, (String, LocalSearcher)], windowNs: Long): Unit = {
+    val threadMx = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val kept = mutable.LinkedHashMap.empty[String, ArrayBuffer[(Array[Float], Array[(Long, Float)])]]
+    var n = 0L
+    def pair(counted: Boolean): Unit = {
+      val p = probeSingle("serve")
+      ServeTypes.foreach { t =>
+        val s = searchers(t)._2
+        val q = queries.next()
+        val req = nextReq()
+        val cpu0 = if (a.trace) threadMx.getThreadCpuTime(tid) else 0L
+        val al0 = if (a.trace) threadMx.getThreadAllocatedBytes(tid) else 0L
+        val (res, ns) = spans(req, s"serve.$t")(s.query(q, K))
+        if (counted) {
+          samples.getOrElseUpdate(s"serve.$t", ArrayBuffer.empty) += ns * refSingleNs / p
+          rawSamples.getOrElseUpdate(s"serve.$t", ArrayBuffer.empty) += ns.toDouble
+          if (a.trace) {
+            note(s"serve.cpu_us", (threadMx.getThreadCpuTime(tid) - cpu0) / 1e3 * refSingleNs / p)
+            note(s"serve.alloc_bytes", (threadMx.getThreadAllocatedBytes(tid) - al0).toDouble)
+          }
+        }
+        verdict(s"$t serve", Checks.wellFormed(toHits(res), K).toSeq)
+        if (n % ServeCheckEvery == 0) kept.getOrElseUpdate(t, ArrayBuffer.empty) += ((q, res))
+      }
+      n += 1
+    }
+    for (_ <- 0 until ServeWarmup) pair(counted = false)
+    System.gc()
+    val gc0 = gcMs()
+    val end = System.nanoTime() + windowNs
+    while (System.nanoTime() < end) pair(counted = true)
+    note("jvm.gc_ms", gcMs() - gc0)
+
+    kept.foreach { case (t, ks) =>
+      val truth = c.topKAll(ks.map(_._1).toIndexedSeq, K, a.threads)
+      val sq = ks.take(ServeSparkChecks).map(_._1).toIndexedSeq
+      val viaSpark = VectorIndex.open(spark, searchers(t)._1).query(queriesDf(sq), K).collect()
+      val sparkHits = hitsByQuery(viaSpark, sq.length)
+      ks.indices.foreach { i =>
+        val (q, res) = ks(i)
+        val h = toHits(res)
+        val issues = ArrayBuffer.empty[String]
+        if (t == "FLAT") issues ++= Checks.matchesExact(h, truth(i), id => Some(c.distance(id, q)).filter(_ => c.contains(id)))
+        else recalls.getOrElseUpdate(s"serve.$t", ArrayBuffer.empty) += Checks.recall(h, truth(i))
+        if (i < sq.length) issues ++= Checks.sameResults(h, sparkHits(i))
+        verdict(s"$t serve vs exact and Spark", issues.toSeq)
+      }
+    }
+  }
+
   // --------------------------------------------------------- ingest_update
 
   private def ingestUpdate(): Unit = {
@@ -366,13 +511,8 @@ final class Bench(a: Args) extends AutoCloseable {
     startSession()
     val df = vectorsDf(rows, a.threads)
     val rowBytes = rows.length.toLong * gen.dims * 4
-    // the one build of this set-up is repeated and its median counts; the
-    // workload runs on the first, the only one in `write_amp`
-    val uris = (0 until UpdateBuilds).map(i => runDir.resolve(s"update/IVF_FLAT-$i").toString)
-    setup(Probe.median(uris.zipWithIndex.map { case (u, i) =>
-      build(u, df, "IVF_FLAT", rowBytes, accounted = i == 0)
-    }))
-    val uri = uris.head
+    val uri = runDir.resolve("update/IVF_FLAT").toString
+    setup(build(uri, df, "IVF_FLAT", rowBytes))
     val dir = Paths.get(uri)
 
     val deleted = mutable.HashSet.empty[Long]
@@ -447,9 +587,8 @@ final class Bench(a: Args) extends AutoCloseable {
       bytesWritten += written
       cycleBytes += written
       verdict("maintenance", checkSparkBusy(t))
-      val scale = refAllNs / t.probeNs
-      cycles += t.value.map { case (kk, v) => kk -> v * scale } ++ Map(
-        "cycle_s" -> t.normNs / 1e9, "bytes_written" -> cycleBytes.toDouble,
+      cycles += t.value ++ Map(
+        "cycle_s" -> t.ns / 1e9, "bytes_written" -> cycleBytes.toDouble,
         "index_bytes" -> FileTree.bytes(dir).toDouble,
         "log_files" -> FileTree.files(dir.resolve("updates"), ".parquet").toDouble)
       cycleBytes = 0L
@@ -479,7 +618,7 @@ final class Bench(a: Args) extends AutoCloseable {
     side("ingest_update.rounds") = UpdateRounds
     note("space_amp", FileTree.bytes(dir).toDouble / (c.size.toLong * gen.dims * 4))
     val settled = ArrayBuffer.empty[Double]
-    while (System.nanoTime() < end) settled += read(Nil, counted = false).normNs / 1e6
+    while (System.nanoTime() < end) settled += read(Nil, counted = false).ns / 1e6
     side("ingest_update.settled_read_ms") = settled.toSeq
 
     // a fresh session sees exactly the live ids on disk
@@ -488,77 +627,6 @@ final class Bench(a: Args) extends AutoCloseable {
     val all = s.query(c.vector(c.idAt(0)), c.size + 1, nprobe = Int.MaxValue)
     verdict("reopen in a new session", Checks.sameIds(all.map(_._1).toSeq, c.liveIds).toSeq ++
       (if (s.numVectors != c.size) Seq(s"snapshot holds ${s.numVectors}, expected ${c.size}") else Nil))
-  }
-
-  // ------------------------------------------------------------- knn_serve
-
-  private def knnServe(): Unit = {
-    val t0 = System.nanoTime()
-    val (c, rows) = corpus(ServeCorpus)
-    val queries = gen.stream(Gen.QueryStream)
-    side("bench.gen_s") = (System.nanoTime() - t0) / 1e9
-    startSession()
-    val df = vectorsDf(rows, a.threads)
-    val rowBytes = rows.length.toLong * gen.dims * 4
-    val searchers = mutable.LinkedHashMap.empty[String, (String, LocalSearcher)]
-    setup(ServeTypes.map { t =>
-      val uri = runDir.resolve(s"serve/$t").toString
-      val b = build(uri, df, t, rowBytes)
-      val (s, snap) = snapshot(uri, t)
-      searchers(t) = (uri, s)
-      b + snap
-    }.sum)
-
-    val threadMx = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
-    val tid = Thread.currentThread().getId
-    val kept = mutable.LinkedHashMap.empty[String, ArrayBuffer[(Array[Float], Array[(Long, Float)])]]
-    var n = 0L
-    def pair(counted: Boolean): Unit = {
-      val p = probeSingle()
-      ServeTypes.foreach { t =>
-        val s = searchers(t)._2
-        val q = queries.next()
-        val req = nextReq()
-        val cpu0 = if (a.trace) threadMx.getThreadCpuTime(tid) else 0L
-        val al0 = if (a.trace) threadMx.getThreadAllocatedBytes(tid) else 0L
-        val (res, ns) = spans(req, s"serve.$t")(s.query(q, K))
-        if (counted) {
-          val norm = ns * refSingleNs / p
-          samples.getOrElseUpdate(t, ArrayBuffer.empty) += norm
-          rawSamples.getOrElseUpdate(t, ArrayBuffer.empty) += ns.toDouble
-          if (a.trace) {
-            note(s"serve.cpu_us", (threadMx.getThreadCpuTime(tid) - cpu0) / 1e3 * refSingleNs / p)
-            note(s"serve.alloc_bytes", (threadMx.getThreadAllocatedBytes(tid) - al0).toDouble)
-          }
-        }
-        verdict(s"$t serve", Checks.wellFormed(toHits(res), K).toSeq)
-        if (n % ServeCheckEvery == 0) kept.getOrElseUpdate(t, ArrayBuffer.empty) += ((q, res))
-      }
-      n += 1
-    }
-    for (_ <- 0 until ServeWarmup) pair(counted = false)
-    System.gc()
-    val gc0 = gcMs()
-    val end = System.nanoTime() + a.seconds * 1000000000L
-    while (System.nanoTime() < end) pair(counted = true)
-    note("jvm.gc_ms", gcMs() - gc0)
-
-    // sampled checks: exact ground truth, and Spark's answer on the same index
-    kept.foreach { case (t, ks) =>
-      val truth = c.topKAll(ks.map(_._1).toIndexedSeq, K, a.threads)
-      val sq = ks.take(ServeSparkChecks).map(_._1).toIndexedSeq
-      val viaSpark = VectorIndex.open(spark, searchers(t)._1).query(queriesDf(sq), K).collect()
-      val sparkHits = hitsByQuery(viaSpark, sq.length)
-      ks.indices.foreach { i =>
-        val (q, res) = ks(i)
-        val h = toHits(res)
-        val issues = ArrayBuffer.empty[String]
-        if (t == "FLAT") issues ++= Checks.matchesExact(h, truth(i), id => Some(c.distance(id, q)).filter(_ => c.contains(id)))
-        else recalls.getOrElseUpdate(t, ArrayBuffer.empty) += Checks.recall(h, truth(i))
-        if (i < sq.length) issues ++= Checks.sameResults(h, sparkHits(i))
-        verdict(s"$t serve vs exact and Spark", issues.toSeq)
-      }
-    }
   }
 
   private def toHits(res: Array[(Long, Float)]): Seq[Hit] =
@@ -570,7 +638,8 @@ final class Bench(a: Args) extends AutoCloseable {
   // ----------------------------------------------------------------- output
 
   private def result(): String = {
-    val sessionS = sessionRawNs * refAllNs / Probe.median(probes("all").toSeq) / 1e9
+    // session start is paid by every JVM of the run: its median counts
+    val sessionS = Probe.median(sessions.toSeq)
     val setupS = sessionS + stepsS
     side("setup.session_s") = sessionS
     side("setup.steps_s") = stepsS
@@ -588,27 +657,27 @@ final class Bench(a: Args) extends AutoCloseable {
       ("recall_at_10", recall, "ratio"), ("write_amp", writeAmp, "ratio"))
 
     kinds.foreach { kk =>
+      val raw = rawSamples(kk)
       side(s"kind.$kk.n") = samples(kk).length
       side(s"kind.$kk.p50_ms") = Probe.median(samples(kk).toSeq) / 1e6
       side(s"kind.$kk.tail_ms") = Probe.quantile(samples(kk).toSeq, tailQ(samples(kk).length)) / 1e6
-      side(s"kind.$kk.raw_p50_ms") = Probe.median(rawSamples(kk).toSeq) / 1e6
+      side(s"kind.$kk.raw_p50_ms") = Probe.median(raw.toSeq) / 1e6
       side(s"kind.$kk.deciles_ms") = (1 to 9).map(d => Probe.quantile(samples(kk).toSeq, d / 10.0) / 1e6)
-      side(s"kind.$kk.raw_deciles_ms") = (1 to 9).map(d => Probe.quantile(rawSamples(kk).toSeq, d / 10.0) / 1e6)
+      side(s"kind.$kk.raw_deciles_ms") = (1 to 9).map(d => Probe.quantile(raw.toSeq, d / 10.0) / 1e6)
       if (samples(kk).length <= 64) {
         side(s"kind.$kk.ms") = samples(kk).map(_ / 1e6).toSeq
-        side(s"kind.$kk.raw_ms") = rawSamples(kk).map(_ / 1e6).toSeq
+        side(s"kind.$kk.raw_ms") = raw.map(_ / 1e6).toSeq
       }
     }
     recalls.foreach { case (kk, r) => side(s"kind.$kk.recall_at_10") = r.sum / r.length }
+    priorProbes.foreach { case (kk, p) => probes.getOrElseUpdate(kk, ArrayBuffer.empty).prependAll(p) }
     probes.foreach { case (kk, p) => side(s"probe.$kk.median_ms") = Probe.median(p.toSeq) / 1e6 }
+    side("setup.sessions_s") = sessions.toSeq
     layer.foreach { case (kk, v) => side(s"layer.$kk") = v.sum / v.length }
     side("problems") = problems.toSeq
-    side("spans") = spans.count
 
     val metrics = if (a.trace) perLayer() else e2e
-    val name = s"${a.workload}-seed${a.seed}-trace${if (a.trace) 1 else 0}"
     Files.createDirectories(a.out)
-    spans.write(a.out.resolve(s"$name.spans.jsonl"))
     def asJson(ms: Seq[(String, Double, String)]) =
       ListMap(ms.map { case (n, v, u) => n -> ListMap("value" -> v, "unit" -> u) }: _*)
     Files.write(a.out.resolve(s"$name.json"), json(
@@ -682,13 +751,14 @@ final class Bench(a: Args) extends AutoCloseable {
 object Bench {
   val K = 10
   val ProbeWarmup = 400
+  val SparkProbes = 5 // driver-thread probes before each Spark-side operation
   val BaseTs = 1000L
 
-  val BatchCorpus = 5000
+  val BatchCorpus = 3000
   val BatchTypes = IndexedSeq("FLAT", "IVF_FLAT", "IVF_PQ", "VAMANA")
   val BatchQueries = 64
-  val BatchWarmup = 2
-  val BatchMinRounds = 3 // timed batches per index, at the least
+  val BatchWarmup = 1
+  val BatchMinRounds = 2 // timed batches per index and JVM, at the least
 
   val UpdateCorpus = 5000
   val UpsertNew = 150
@@ -699,9 +769,7 @@ object Bench {
   val UpdateRounds = 6
   val MaintainEvery = 3
   val UpdateWarmup = 1
-  val UpdateBuilds = 3
 
-  val ServeCorpus = 5000
   val ServeTypes = IndexedSeq("IVF_FLAT", "FLAT")
   val ServeWarmup = 200
   val ServeCheckEvery = 16
@@ -709,7 +777,7 @@ object Bench {
 
   /** Tail percentile of n samples: the highest with at least ten samples
     * beyond it, between the median and p99. Below 20 samples it is the
-    * median, so `tail_ms` equals `p50_ms` on the Spark workloads, whose
-    * kinds hold 2 to 6 samples a run. */
+    * median, so a Spark kind (4 to 6 samples a run) adds its median to
+    * `tail_ms`; only the serving kinds of `knn_batch` add a real tail. */
   def tailQ(n: Int): Double = math.min(0.99, math.max(0.5, 1.0 - 10.0 / n))
 }

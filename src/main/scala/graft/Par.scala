@@ -35,10 +35,8 @@ object Par {
     * is spread per call (every Bm25/LangModel fit + score pass; at 100 TB
     * the doubled driver-side planning is listing-heavy). The probe's
     * answer is a pure function of the (analyzed, canonicalized) plan, so
-    * it is memoized per (session, semantic plan hash): repeat calls skip
-    * physical planning entirely. Bounded, cleared on overflow — a stale
-    * or collided entry can only misroute spread-vs-passthrough, never
-    * correctness (same posture as Knn.measuredSizes). */
+    * it is kept in [[SessionCache]] under the plan's semantic hash: repeat
+    * calls skip physical planning entirely. */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val floor = Conf.int(spark, MinComputeParallelismKey,
@@ -47,17 +45,10 @@ object Par {
     // parallelism is the source's concern) — pass them through untouched
     if (floor <= 1 || df.isStreaming) df
     else {
-      val key = (System.identityHashCode(spark),
-        df.queryExecution.analyzed.canonicalized.semanticHash())
-      val parts = plannedParts.computeIfAbsent(key, { _ =>
-        if (plannedParts.size > PlannedPartsCap) plannedParts.clear()
-        Integer.valueOf(df.rdd.getNumPartitions)
-      })
+      val hash = df.queryExecution.analyzed.canonicalized.semanticHash()
+      val parts = SessionCache.get(spark, SessionCache.NoPath, ("Par.plannedParts", hash))(
+        df.rdd.getNumPartitions)
       if (parts >= floor) df else df.repartition(floor)
     }
   }
-
-  private val PlannedPartsCap = 1024
-  private val plannedParts =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Integer]()
 }

@@ -22,10 +22,9 @@ object SparkEntry {
     * re-planning `spark.read.parquet` over the same fixture re-ran file
     * listing + footer schema reads (one small job per table per query —
     * a measurable slice of the 124-query suite). The driver's testdata is
-    * read-only by contract, so the relation is reusable for the session
-    * (same mechanism as the index layers' version-read cache). */
+    * read-only by contract, so the relation is reusable for the session. */
   private def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    graft.index.VectorIndex.readVersioned(spark, s"$dir/$name.parquet")
+    graft.SessionCache.parquet(spark, s"$dir/$name.parquet")
 
   private def emb(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "embeddings")
@@ -1104,7 +1103,7 @@ object SparkEntry {
         .select(col("id"), col("nbr_id"))
         .write.parquet(s"$u/edges")
     }
-    val edges = graft.index.VectorIndex.readVersioned(spark, s"$uri/edges")
+    val edges = graft.SessionCache.parquet(spark, s"$uri/edges")
     val seeds = e.where(col("vec_id") % 5 === 0)
       .select(col("vec_id").as("id"), col("label"))
     graft.operators.KnnGraph.propagateLabels(edges, seeds, iters = 2)
@@ -1965,14 +1964,14 @@ object SparkEntry {
     }
 
   private def textBpeTrain(spark: SparkSession, dir: String): DataFrame =
-    graft.index.VectorIndex.readVersioned(spark, s"${bpeModelUri(spark, dir)}/merges").orderBy("rank")
+    graft.SessionCache.parquet(spark, s"${bpeModelUri(spark, dir)}/merges").orderBy("rank")
 
   /** Per-document token counts under the learned merges — the encode
     * half: a pure codegen'd replace chain ([[graft.text.BpeTrainer
     * .encodeExpr]], merges as plan literals, no UDF/join). The oracle
     * re-learns the merges AND re-encodes every document. */
   private def textBpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val merges = graft.index.VectorIndex.readVersioned(spark, s"${bpeModelUri(spark, dir)}/merges")
+    val merges = graft.SessionCache.parquet(spark, s"${bpeModelUri(spark, dir)}/merges")
       .orderBy("rank").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     graft.text.BpeTrainer.encodeTokenCounts(docs(spark, dir), merges)
@@ -2050,7 +2049,7 @@ object SparkEntry {
     * space, sits inside one hash. Bounded to [[BpeIdsDocs]] docs. */
   private val BpeIdsDocs = 40
   private def textBpeEncodeIds(spark: SparkSession, dir: String): DataFrame = {
-    val merges = graft.index.VectorIndex.readVersioned(spark, s"${bpeModelUri(spark, dir)}/merges")
+    val merges = graft.SessionCache.parquet(spark, s"${bpeModelUri(spark, dir)}/merges")
       .orderBy("rank").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     graft.text.BpeTrainer.encodeIds(
@@ -2097,7 +2096,7 @@ object SparkEntry {
   private val PackIdsSeqLen = 64
   private val PackIdsShards = 4
   private def textPackIds(spark: SparkSession, dir: String): DataFrame = {
-    val merges = graft.index.VectorIndex.readVersioned(spark, s"${bpeModelUri(spark, dir)}/merges")
+    val merges = graft.SessionCache.parquet(spark, s"${bpeModelUri(spark, dir)}/merges")
       .orderBy("rank").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     val d40 = docs(spark, dir).where(col("doc_id") < BpeIdsDocs)
@@ -2204,7 +2203,7 @@ object SparkEntry {
     }
 
   private def textBpeTrainBytes(spark: SparkSession, dir: String): DataFrame =
-    graft.index.VectorIndex.readVersioned(spark, s"${bpeByteModelUri(spark, dir)}/merges").orderBy("rank")
+    graft.SessionCache.parquet(spark, s"${bpeByteModelUri(spark, dir)}/merges").orderBy("rank")
 
   /** Byte-mode head: GPT-2-style pretokens of the SALTED text →
     * hex-pair segmentations. */
@@ -2234,7 +2233,7 @@ object SparkEntry {
     * converts hex pairs back to byte values — training through id space
     * in one hash, multi-byte UTF-8 included. */
   private def textBpeEncodeIdsBytes(spark: SparkSession, dir: String): DataFrame = {
-    val merges = graft.index.VectorIndex.readVersioned(spark, s"${bpeByteModelUri(spark, dir)}/merges")
+    val merges = graft.SessionCache.parquet(spark, s"${bpeByteModelUri(spark, dir)}/merges")
       .orderBy("rank").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
     graft.text.BpeTrainer.encodeIdsBytes(

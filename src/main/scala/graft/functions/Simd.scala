@@ -3,8 +3,6 @@ package graft.functions
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
-import scala.collection.concurrent.TrieMap
-
 /** Cluster-wide control for the Panama Vector API distance kernels.
   *
   * [[VecKernels]] detects SIMD per-JVM, which on a heterogeneous cluster
@@ -35,12 +33,10 @@ import scala.collection.concurrent.TrieMap
 object Simd extends Logging {
   val SimdKey = "spark.graft.simd"
 
-  private val synced = TrieMap.empty[Int, Unit]
-
   /** Apply [[SimdKey]] once per session; no-op when the conf is unset. */
   def syncOnce(spark: SparkSession): Unit =
     spark.conf.getOption(SimdKey).foreach { _ =>
-      synced.getOrElseUpdate(System.identityHashCode(spark), sync(spark))
+      graft.SessionCache.get(spark, graft.SessionCache.NoPath, "Simd.synced")(sync(spark))
     }
 
   /** Apply [[SimdKey]] to the driver and every reachable executor now.

@@ -30,9 +30,8 @@ class IvfPqIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
 
   lazy val centroids: Array[Array[Float]] =
     if (historyIdx < 0) Array.empty
-    else VectorIndex.cachedArtifact(spark,
-        s"$uri/centroids/v=$baseTimestamp#centroids") {
-      VectorIndex.readVersioned(spark, s"$uri/centroids/v=$baseTimestamp")
+    else graft.SessionCache.get(spark, s"$uri/centroids/v=$baseTimestamp", "centroids") {
+      readVersioned(s"$uri/centroids/v=$baseTimestamp")
         .orderBy("partition_id").collect()
         .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
     }
@@ -40,9 +39,8 @@ class IvfPqIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
   /** codebooks(subspace)(code) = sub-centroid */
   lazy val codebooks: Array[Array[Array[Float]]] =
     if (historyIdx < 0) Array.empty
-    else VectorIndex.cachedArtifact(spark,
-        s"$uri/pq_codebooks/v=$baseTimestamp#codebooks") {
-      val rows = VectorIndex.readVersioned(spark, s"$uri/pq_codebooks/v=$baseTimestamp")
+    else graft.SessionCache.get(spark, s"$uri/pq_codebooks/v=$baseTimestamp", "codebooks") {
+      val rows = readVersioned(s"$uri/pq_codebooks/v=$baseTimestamp")
         .orderBy("subspace", "code").collect()
       rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
         rs.sortBy(_.getInt(1)).map(r => r.getSeq[Float](2).toArray).toArray

@@ -35,9 +35,8 @@ class IvfSq8Index(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
 
   lazy val centroids: Array[Array[Float]] =
     if (historyIdx < 0) Array.empty
-    else VectorIndex.cachedArtifact(spark,
-        s"$uri/centroids/v=$baseTimestamp#centroids") {
-      VectorIndex.readVersioned(spark, s"$uri/centroids/v=$baseTimestamp")
+    else graft.SessionCache.get(spark, s"$uri/centroids/v=$baseTimestamp", "centroids") {
+      readVersioned(s"$uri/centroids/v=$baseTimestamp")
         .orderBy("partition_id").collect()
         .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
     }
@@ -45,9 +44,8 @@ class IvfSq8Index(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
   /** (mins, scales), each dims long. */
   lazy val sqParams: (Array[Float], Array[Float]) =
     if (historyIdx < 0) (Array.empty, Array.empty)
-    else VectorIndex.cachedArtifact(spark,
-        s"$uri/sq_params/v=$baseTimestamp#sq_params") {
-      val r = VectorIndex.readVersioned(spark, s"$uri/sq_params/v=$baseTimestamp").head()
+    else graft.SessionCache.get(spark, s"$uri/sq_params/v=$baseTimestamp", "sq_params") {
+      val r = readVersioned(s"$uri/sq_params/v=$baseTimestamp").head()
       (r.getSeq[Float](r.fieldIndex("mins")).toArray,
         r.getSeq[Float](r.fieldIndex("scales")).toArray)
     }

@@ -562,9 +562,8 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
   lazy val pqCodebooks: Array[Array[Array[Float]]] =
     if (historyIdx < 0 || !Storage.exists(s"$uri/pq_codebooks/v=$baseTimestamp"))
       Array.empty
-    else VectorIndex.cachedArtifact(spark,
-        s"$uri/pq_codebooks/v=$baseTimestamp#codebooks") {
-      val rows = VectorIndex.readVersioned(spark, s"$uri/pq_codebooks/v=$baseTimestamp")
+    else graft.SessionCache.get(spark, s"$uri/pq_codebooks/v=$baseTimestamp", "codebooks") {
+      val rows = readVersioned(s"$uri/pq_codebooks/v=$baseTimestamp")
         .orderBy("subspace", "code").collect()
       rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
         rs.sortBy(_.getInt(1)).map(r => r.getSeq[Float](2).toArray).toArray
@@ -574,9 +573,8 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
   lazy val shardCentroids: Array[Array[Float]] =
     if (historyIdx < 0 || !Storage.exists(s"$uri/centroids/v=$baseTimestamp"))
       Array.empty
-    else VectorIndex.cachedArtifact(spark,
-        s"$uri/centroids/v=$baseTimestamp#centroids") {
-      VectorIndex.readVersioned(spark, s"$uri/centroids/v=$baseTimestamp")
+    else graft.SessionCache.get(spark, s"$uri/centroids/v=$baseTimestamp", "centroids") {
+      readVersioned(s"$uri/centroids/v=$baseTimestamp")
         .orderBy("partition_id")
         .collect()
         .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)

@@ -203,17 +203,11 @@ abstract class VectorIndex(
     case _ => distance.cast("float")
   }
 
-  /** Memoized parquet reads of this handle's IMMUTABLE version artifacts
-    * (`base/v=<ts>`, `graph/v=<ts>`, `sketch/v=<ts>` — a version directory
-    * never changes after its meta commit; mutations write NEW versions).
-    * Re-creating the relation per query call re-runs partition discovery
-    * over the version tree, a planner cost that grows with the partition
-    * count and dominated probe-pruned batches at reference scale (10M ×
-    * 3162 partitions, PERF.md) — caching the analyzed DataFrame pays the
-    * listing once per handle. NEVER use for the updates log: it mutates
-    * in place between queries. */
+  /** Read of an IMMUTABLE version artifact (`base/v=<ts>`, `graph/v=<ts>`,
+    * ...: a version directory never changes after its meta commit). Never
+    * for the updates log, which changes in place between queries. */
   protected def readVersioned(path: String): DataFrame =
-    VectorIndex.readVersioned(spark, path)
+    graft.SessionCache.parquet(spark, path)
 
   /** Empty (id: Long, vector: array<float>) frame — the additions side of a
     * windowed read whose updates log has no in-window rows. */
@@ -230,18 +224,23 @@ abstract class VectorIndex(
 
   protected def updatesPath: String = s"$uri/updates"
 
+  /** The updates log, None when its directory is missing or empty. Every
+    * log mutator invalidates [[updatesPath]], re-arming this and the
+    * window probe below. */
   protected def updatesLog(): Option[DataFrame] =
-    VectorIndex.cachedUpdatesLog(spark, updatesPath)
+    graft.SessionCache.get(spark, updatesPath, "updatesLog") {
+      if (Storage.nonEmptyDir(updatesPath)) Some(spark.read.parquet(updatesPath))
+      else None
+    }
 
   /** Updates visible at this read: ts within [[updateWindow]] (both bounds
     * inclusive; the point-in-time default (base_ts+1, read_ts) is exactly
     * the historical "ts in (base_ts, read_ts]"). The in-window emptiness
-    * probe (one isEmpty job per updates-merged query before) is memoized
-    * per (session, log path, window) and re-armed by every log mutator. */
+    * probe is one isEmpty job, so it is memoized per window. */
   protected def updatesInWindow(): Option[DataFrame] = updatesLog().flatMap { log =>
     val (lo, hi) = updateWindow
     val w = log.where(col("ts") >= lo && col("ts") <= hi)
-    if (VectorIndex.cachedLogWindowEmpty(spark, updatesPath, lo, hi)(w.isEmpty)) None
+    if (graft.SessionCache.get(spark, updatesPath, ("windowEmpty", lo, hi))(w.isEmpty)) None
     else Some(w)
   }
 
@@ -267,7 +266,7 @@ abstract class VectorIndex(
       .write.mode("append").parquet(updatesPath)
     IndexMeta.write(uri, IndexMeta.read(uri).copy(hasUpdates = true))
     // re-arm the memoized log relation + window-emptiness probes
-    VectorIndex.invalidateReadsUnder(updatesPath)
+    graft.SessionCache.invalidateUnder(updatesPath)
   }
 
   /** Tombstone a batch of ids at `ts`: vector = null
@@ -280,7 +279,7 @@ abstract class VectorIndex(
         lit(ts).as("ts"))
       .write.mode("append").parquet(updatesPath)
     IndexMeta.write(uri, IndexMeta.read(uri).copy(hasUpdates = true))
-    VectorIndex.invalidateReadsUnder(updatesPath)
+    graft.SessionCache.invalidateUnder(updatesPath)
   }
 
   /** Upserts + tombstones in ONE log append: `upserts` rows
@@ -302,7 +301,7 @@ abstract class VectorIndex(
       lit(ts).as("ts"))
     up.unionByName(del).write.mode("append").parquet(updatesPath)
     IndexMeta.write(uri, IndexMeta.read(uri).copy(hasUpdates = true))
-    VectorIndex.invalidateReadsUnder(updatesPath)
+    graft.SessionCache.invalidateUnder(updatesPath)
   }
 
   /** Append MANY logical batches as one write job that still lays each
@@ -334,7 +333,7 @@ abstract class VectorIndex(
     spark.createDataset(shaped).toDF("external_id", "vector", "ts")
       .write.mode("append").parquet(updatesPath)
     IndexMeta.write(uri, IndexMeta.read(uri).copy(hasUpdates = true))
-    VectorIndex.invalidateReadsUnder(updatesPath)
+    graft.SessionCache.invalidateUnder(updatesPath)
   }
 
   /** Merge base + updates into a fresh base version at `newTs`
@@ -579,131 +578,6 @@ abstract class VectorIndex(
 
 object VectorIndex {
 
-  /** SESSION-wide memoized parquet reads of IMMUTABLE version artifacts
-    * (`base/v=<ts>`, `graph/v=<ts>`, `sketch/v=<ts>`, `pq/v=<ts>`,
-    * `centroids/v=<ts>` — a version directory never changes after its meta
-    * commit; mutations write NEW version paths). A fresh handle is opened
-    * per query call, so a handle-local memo still re-ran partition
-    * discovery + footer reads once per query (profiled as a 50-task
-    * listing job per read at bench scale; at 10M × 3162 partitions the
-    * discovery dominated probe-pruned batches, PERF.md).
-    *
-    * Lifecycle (the r13 VERDICT's hygiene items): caches hang off the
-    * SparkSession through a WeakHashMap, so a stopped/unreferenced session's
-    * relations evict with the session instead of leaking analyzed plans for
-    * the life of the JVM, and sibling sessions (`newSession()`) no longer
-    * share relations bound to another session. Each per-session relation
-    * map is capped — overflow clears the map (the only cost of a clear is
-    * re-listing). Invalidation: [[Storage.deleteRecursively]] AND
-    * [[Storage.move]] (both src and dst) drop every entry under the touched
-    * prefix, so a later re-write at the same path can never serve a stale
-    * relation.
-    *
-    * The updates log mutates IN PLACE between queries, so it gets its own
-    * entry class ([[cachedUpdatesLog]]) invalidated by the log mutators
-    * themselves (updateBatch / deleteBatch / compaction's delete+move) —
-    * the same mutator-invalidation contract the version cache rides. */
-  private final class SessionCaches {
-    val relations = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-    val logs = scala.collection.concurrent.TrieMap.empty[String, Option[DataFrame]]
-    val logWindowEmpty =
-      scala.collection.concurrent.TrieMap.empty[(String, Long, Long), Boolean]
-    // key = "<artifact path>#<tag>"; value = the collected driver-side form
-    val artifacts = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
-  }
-  private val RelationCacheCap = 8192
-  private val sessionCaches =
-    new java.util.WeakHashMap[SparkSession, SessionCaches]()
-
-  private def cachesFor(spark: SparkSession): SessionCaches =
-    sessionCaches.synchronized {
-      var c = sessionCaches.get(spark)
-      if (c == null) { c = new SessionCaches; sessionCaches.put(spark, c) }
-      c
-    }
-
-  private def allCaches(): List[SessionCaches] = sessionCaches.synchronized {
-    val it = sessionCaches.values.iterator()
-    var out = List.empty[SessionCaches]
-    while (it.hasNext) out ::= it.next()
-    out
-  }
-
-  private[graft] def readVersioned(spark: SparkSession, path: String): DataFrame = {
-    val c = cachesFor(spark)
-    if (c.relations.size > RelationCacheCap) c.relations.clear()
-    c.relations.getOrElseUpdate(path, spark.read.parquet(path))
-  }
-
-  /** Memoized SESSION-level reads under the same invalidation contract as
-    * [[readVersioned]], for callers whose read needs custom construction
-    * (e.g. EventOps' conf-gated nanos schema inference). */
-  private[graft] def readCached(spark: SparkSession, path: String)(
-      make: => DataFrame): DataFrame = {
-    val c = cachesFor(spark)
-    if (c.relations.size > RelationCacheCap) c.relations.clear()
-    c.relations.getOrElseUpdate(path, make)
-  }
-
-  /** The updates log under `path` as a memoized analyzed relation — None
-    * when the directory is missing/empty (the existence probe is memoized
-    * too: at scale it is a remote listing per query). Every log mutator
-    * invalidates under the log path, re-arming both the probe and the
-    * relation. */
-  private[index] def cachedUpdatesLog(
-      spark: SparkSession, path: String): Option[DataFrame] = {
-    val c = cachesFor(spark)
-    if (c.logs.size > RelationCacheCap) c.logs.clear()
-    c.logs.getOrElseUpdate(path,
-      if (Storage.nonEmptyDir(path)) Some(spark.read.parquet(path)) else None)
-  }
-
-  /** Memoized "does the log have rows in [lo, hi]" probe — this was one
-    * isEmpty job per updates-merged QUERY (the r13 VERDICT's per-query
-    * driver floor); the window content only changes through the mutators
-    * that invalidate the log path. */
-  private[index] def cachedLogWindowEmpty(
-      spark: SparkSession, path: String, lo: Long, hi: Long)(
-      probe: => Boolean): Boolean = {
-    val c = cachesFor(spark)
-    if (c.logWindowEmpty.size > RelationCacheCap) c.logWindowEmpty.clear()
-    c.logWindowEmpty.getOrElseUpdate((path, lo, hi), probe)
-  }
-
-  /** Memoized driver-side materialization of a SMALL immutable version
-    * artifact — IVF centroids, PQ codebooks, SQ8 quantizer ranges, VAMANA
-    * shard maps. The reference's `Index` object is LONG-LIVED and holds
-    * exactly these in memory for its lifetime (ivf_flat_index.py loads
-    * centroids at open); the Spark engine opens a fresh handle per query
-    * call, which re-ran the artifact's collect job every time (one job ×
-    * every IVF/PQ/SQ8/VAMANA query). These are model PARAMETERS of a
-    * version — never base vectors, never query results — bytes bounded by
-    * partitions × dims floats, and they live under the same per-session /
-    * capped / invalidate-under-prefix lifecycle as the relation cache, so
-    * a consolidation or history clear re-arms them. `key` must be
-    * "<artifact path>#<tag>"; invalidation matches on the path part. */
-  private[graft] def cachedArtifact[T <: AnyRef](
-      spark: SparkSession, key: String)(make: => T): T = {
-    val c = cachesFor(spark)
-    if (c.artifacts.size > RelationCacheCap) c.artifacts.clear()
-    c.artifacts.getOrElseUpdate(key, make).asInstanceOf[T]
-  }
-
-  private[graft] def invalidateReadsUnder(pathPrefix: String): Unit = {
-    def under(p: String): Boolean =
-      p == pathPrefix || p.startsWith(pathPrefix + "/")
-    def artifactPath(k: String): String = {
-      val i = k.lastIndexOf('#')
-      if (i < 0) k else k.substring(0, i)
-    }
-    allCaches().foreach { c =>
-      c.relations.keys.filter(under).foreach(c.relations.remove)
-      c.logs.keys.filter(under).foreach(c.logs.remove)
-      c.logWindowEmpty.keys.filter(k => under(k._1)).foreach(c.logWindowEmpty.remove)
-      c.artifacts.keys.filter(k => under(artifactPath(k))).foreach(c.artifacts.remove)
-    }
-  }
-
   /** Conf key: estimated build-side bytes above which the IVF/PQ query joins
     * switch from `broadcast()` to a shuffled hash join. Broadcast replicates
     * the per-query probe pairs (and PQ distance tables) to every executor —
@@ -835,20 +709,16 @@ private[graft] object Storage {
     val h = new org.apache.hadoop.fs.Path(p)
     val fs = fsOf(h)
     if (fs.exists(h)) { fs.delete(h, true); () }
-    // drop memoized relations under the deleted tree (see
-    // VectorIndex.versionReadCache) — a re-write at this path must re-list
-    VectorIndex.invalidateReadsUnder(p)
+    graft.SessionCache.invalidateUnder(p)
   }
 
   def move(src: String, dst: String): Unit = {
     val s = new org.apache.hadoop.fs.Path(src)
     val d = new org.apache.hadoop.fs.Path(dst)
     require(fsOf(s).rename(s, d), s"graft: rename $src -> $dst failed")
-    // a move changes what both prefixes serve — drop memoized relations
-    // under each (the r13 VERDICT's "one forgotten call away" hazard:
-    // move-into-place paths no longer depend on the caller pre-invalidating)
-    VectorIndex.invalidateReadsUnder(src)
-    VectorIndex.invalidateReadsUnder(dst)
+    // a move changes what both prefixes serve
+    graft.SessionCache.invalidateUnder(src)
+    graft.SessionCache.invalidateUnder(dst)
   }
 
   /** Byte-preserving directory copy (incremental VAMANA consolidation copies
@@ -961,9 +831,8 @@ class IvfFlatIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
 
   lazy val centroids: Array[Array[Float]] =
     if (historyIdx < 0) Array.empty
-    else VectorIndex.cachedArtifact(spark,
-        s"$uri/centroids/v=$baseTimestamp#centroids") {
-      VectorIndex.readVersioned(spark, s"$uri/centroids/v=$baseTimestamp")
+    else graft.SessionCache.get(spark, s"$uri/centroids/v=$baseTimestamp", "centroids") {
+      readVersioned(s"$uri/centroids/v=$baseTimestamp")
         .orderBy("partition_id")
         .collect()
         .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)

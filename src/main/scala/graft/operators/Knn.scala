@@ -111,34 +111,24 @@ object Knn {
     * trust Spark's autoBroadcast threshold extends); only an over-gate or
     * unknown estimate pays one small aggregate that measures the batch
     * exactly (row count + total vector elements — nq×(24+4d) for float
-    * vectors). The measured size is memoized per (session, canonicalized
-    * plan) so a hot serving loop issuing repeated queries over the same
-    * derived batch pays the sizing job once, not per call. */
+    * vectors). The measured size is kept in [[graft.SessionCache]] under
+    * the plan's semantic hash, so repeated queries over the same derived
+    * batch pay the sizing job once per session. */
   private[operators] def sizedQuerySide(q: DataFrame, vecCol: String): DataFrame = {
     val spark = q.sparkSession
     val max = graft.Conf.long(spark,
       graft.Conf.MaxBroadcastBytesKey, graft.Conf.DefaultMaxBroadcastBytes)
     val planEst = q.queryExecution.optimizedPlan.stats.sizeInBytes
     if (planEst <= BigInt(max)) return broadcast(q)
-    val key = (System.identityHashCode(spark), q.queryExecution.optimizedPlan.canonicalized.semanticHash())
-    val est = measuredSizes.computeIfAbsent(key, { _ =>
-      if (measuredSizes.size > MeasuredSizesCap) measuredSizes.clear()
+    val hash = q.queryExecution.optimizedPlan.canonicalized.semanticHash()
+    val est = graft.SessionCache.get(spark, graft.SessionCache.NoPath, ("Knn.querySize", hash)) {
       val row = q.agg(count(lit(1)).as("n"), sum(size(col(vecCol))).as("elems")).head()
       val nq = row.getLong(0)
       val elems = if (row.isNullAt(1)) 0L else row.getLong(1)
-      java.lang.Long.valueOf(nq * 24L + elems * 4L)
-    })
+      nq * 24L + elems * 4L
+    }
     if (est <= max) broadcast(q) else q
   }
-
-  /** Measured-batch-size memo for [[sizedQuerySide]]. Bounded (cleared
-    * past the cap) and keyed by session identity + semantic plan hash,
-    * so stopped sessions leak at most an (Int, Int) → Long entry and a
-    * re-registered same-shape plan re-measures after a clear. A stale
-    * entry can only misroute broadcast-vs-shuffle, never correctness. */
-  private val MeasuredSizesCap = 1024
-  private val measuredSizes =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), java.lang.Long]()
 
   /** @param db      DataFrame with columns (idCol: Long, vecCol: Array[Float])
     * @param queries DataFrame with columns (qidCol: Long, qvecCol: Array[Float]);

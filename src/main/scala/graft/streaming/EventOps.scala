@@ -32,15 +32,8 @@ object EventOps {
   def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     // session-memoized like every other immutable driver table: the
     // conf-gated schema inference (listing + footer job) re-ran per query.
-    // Routed through VectorIndex.readCached (not a local TrieMap) so the
-    // entry shares the engine-wide lifecycle: weakly keyed by session
-    // (stopped sessions evict), capped, and invalidated by
-    // Storage.deleteRecursively / Storage.move under the path — a caller
-    // that rewrites an events dir through the engine's own storage
-    // primitives re-arms this read. A table appended OUTSIDE those
-    // primitives must call [[invalidate]] to be seen (same immutability
-    // contract as every driver-table read).
-    val raw = VectorIndex.readCached(spark, s"$dir/events.parquet") {
+    // A table appended outside `Storage` must call [[invalidate]] to be seen.
+    val raw = graft.SessionCache.get(spark, s"$dir/events.parquet", "events") {
       val prior = spark.conf.getOption(NanosKey)
       spark.conf.set(NanosKey, "true")
       try spark.read.parquet(s"$dir/events.parquet")
@@ -68,7 +61,7 @@ object EventOps {
     * it): callers that append events outside the engine's own storage
     * primitives re-arm the next [[loadEvents]] with this. */
   def invalidate(dir: String): Unit =
-    VectorIndex.invalidateReadsUnder(s"$dir/events.parquet")
+    graft.SessionCache.invalidateUnder(s"$dir/events.parquet")
 
   /** Tumbling-window aggregate keyed to integer epoch buckets (exact
     * cross-engine compare: no timestamp hashing). */

@@ -66,7 +66,7 @@ object Bm25 {
     * re-run per query); every mutator below invalidates `uri` first, so a
     * refit/append at the same uri always re-lists. */
   private def readModel(spark: SparkSession, uri: String, layer: String): DataFrame =
-    graft.index.VectorIndex.readVersioned(spark, s"$uri/$layer")
+    graft.SessionCache.parquet(spark, s"$uri/$layer")
 
   /** Fit over `docs`: persists `uri/idf (term, df, idf_micro)`,
     * `uri/meta (n_docs, avgdl)`, and the serving postings table
@@ -80,7 +80,7 @@ object Bm25 {
       idCol: String = "doc_id"): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.index.VectorIndex.invalidateReadsUnder(uri)
+    graft.SessionCache.invalidateUnder(uri)
     // one heavy pass: explode + (doc, term) aggregate, written term-sorted;
     // df/idf then derive from the WRITTEN parquet (a posting-table read,
     // not a second corpus explode through lineage). Par.spread: the
@@ -121,10 +121,10 @@ object Bm25 {
       .write.mode("overwrite").parquet(s"$uri/idf")
     Seq((n, avgdl, total)).toDF("n_docs", "avgdl", "total_dl")
       .repartition(1).write.mode("overwrite").parquet(s"$uri/meta")
-    // invalidate AFTER the writes too: a readVersioned racing between the
+    // invalidate AFTER the writes too: a model read racing between the
     // leading invalidate and the overwrite would re-cache the pre-fit
     // relation and serve it forever otherwise
-    graft.index.VectorIndex.invalidateReadsUnder(uri)
+    graft.SessionCache.invalidateUnder(uri)
   }
 
   /** Incrementally index `newDocs` into a fitted model: their postings
@@ -148,7 +148,7 @@ object Bm25 {
       uri: String,
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
-    graft.index.VectorIndex.invalidateReadsUnder(uri)
+    graft.SessionCache.invalidateUnder(uri)
     val spark = newDocs.sparkSession
     import spark.implicits._
     val existing = spark.read.parquet(s"$uri/postings")
@@ -201,7 +201,7 @@ object Bm25 {
     Seq((n, avgdl, total)).toDF("n_docs", "avgdl", "total_dl")
       .repartition(1).write.mode("overwrite").parquet(s"$uri/meta")
     // post-write invalidation, same rationale as fit's
-    graft.index.VectorIndex.invalidateReadsUnder(uri)
+    graft.SessionCache.invalidateUnder(uri)
   }
 
   /** The persisted corpus moments `(n_docs, total_dl)`. Metas written
@@ -230,7 +230,7 @@ object Bm25 {
     * (the vector side's vacuum analogue): the swap is staged-dir +
     * directory move, not atomic against concurrent writers. */
   def compactPostings(spark: SparkSession, uri: String): Unit = {
-    graft.index.VectorIndex.invalidateReadsUnder(uri)
+    graft.SessionCache.invalidateUnder(uri)
     import graft.index.Storage
     val src = s"$uri/postings"
     val tmp = s"$uri/postings_compact_tmp"
@@ -340,10 +340,9 @@ object Bm25 {
   private def rank(postings: DataFrame, qTerms: DataFrame, k: Int, uri: String): DataFrame = {
     require(k > 0, s"graft: BM25 k must be positive, got $k")
     val spark = postings.sparkSession
-    val avgdl = graft.index.VectorIndex.cachedArtifact(spark, s"$uri/meta#avgdl") {
-      java.lang.Double.valueOf(
-        readModel(spark, uri, "meta").head().getAs[Double]("avgdl"))
-    }.doubleValue()
+    val avgdl = graft.SessionCache.get(spark, s"$uri/meta", "avgdl") {
+      readModel(spark, uri, "meta").head().getAs[Double]("avgdl")
+    }
     val idf = readModel(spark, uri, "idf").select("term", "idf_micro")
     val contrib = postings
       .join(graft.gatedSmallSide(qTerms), Seq("term"))
@@ -378,10 +377,9 @@ object Bm25 {
       dfCap: Long): DataFrame = {
     require(k > 0, s"graft: BM25 k must be positive, got $k")
     val spark = postings.sparkSession
-    val avgdl = graft.index.VectorIndex.cachedArtifact(spark, s"$uri/meta#avgdl") {
-      java.lang.Double.valueOf(
-        readModel(spark, uri, "meta").head().getAs[Double]("avgdl"))
-    }.doubleValue()
+    val avgdl = graft.SessionCache.get(spark, s"$uri/meta", "avgdl") {
+      readModel(spark, uri, "meta").head().getAs[Double]("avgdl")
+    }
     val idf = readModel(spark, uri, "idf").select("term", "df", "idf_micro")
     val qt = qTerms.join(graft.gatedSmallSide(idf), Seq("term"))
       .select("qid", "term", "df", "idf_micro")

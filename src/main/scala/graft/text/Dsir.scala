@@ -49,7 +49,7 @@ object Dsir {
       textCol: String = "text"): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.index.VectorIndex.invalidateReadsUnder(uri)
+    graft.SessionCache.invalidateUnder(uri)
     val pairs = docs
       .select(explode(bigramBucketCounts(col(textCol), buckets)).as("e"),
         targetCond.cast("boolean").as("t"))
@@ -91,13 +91,12 @@ object Dsir {
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
-    // collected through the artifact memo (one head() job per score call
+    // memoized in SessionCache (one head() job per score call
     // otherwise; invalidated with the model uri)
-    val buckets = graft.index.VectorIndex.cachedArtifact(spark, s"$uri/meta#buckets") {
-      Integer.valueOf(graft.index.VectorIndex.readVersioned(spark, s"$uri/meta")
-        .head().getAs[Int]("buckets"))
-    }.intValue()
-    val model = graft.index.VectorIndex.readVersioned(spark, s"$uri/model")
+    val buckets = graft.SessionCache.get(spark, s"$uri/meta", "buckets") {
+      graft.SessionCache.parquet(spark, s"$uri/meta").head().getAs[Int]("buckets")
+    }
+    val model = graft.SessionCache.parquet(spark, s"$uri/model")
     // bucket -1 can never collide (real buckets are in [0, buckets)); its
     // cnt 0 contributes to neither sum
     val sentinel = array(struct(lit(-1L).as("bucket"), lit(0L).as("cnt")))

@@ -53,7 +53,7 @@ object LangModel {
       uri: String,
       textCol: String = "text"): Unit = {
     val spark = train.sparkSession
-    graft.index.VectorIndex.invalidateReadsUnder(uri)
+    graft.SessionCache.invalidateUnder(uri)
     // Par.spread: the per-doc trigram kernel + explode fuse into the scan
     // stage — a below-parallelism source would serialize them (guide §2.5)
     val grams = graft.Par.spread(train)
@@ -100,15 +100,14 @@ object LangModel {
       textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     // session-memoized model layers (invalidated by trainCharTrigram)
-    val model3 = graft.index.VectorIndex.readVersioned(spark, s"$uri/model3")
-    val model2 = graft.index.VectorIndex.readVersioned(spark, s"$uri/model2")
-    // collected through the artifact memo: the singleton meta row's head()
+    val model3 = graft.SessionCache.parquet(spark, s"$uri/model3")
+    val model2 = graft.SessionCache.parquet(spark, s"$uri/model2")
+    // memoized in SessionCache: the singleton meta row's head()
     // was one job per scoring query (invalidated with the model uri)
-    val logp0 = graft.index.VectorIndex.cachedArtifact(spark, s"$uri/meta#logp0") {
-      java.lang.Long.valueOf(
-        graft.index.VectorIndex.readVersioned(spark, s"$uri/meta")
-          .select("logp0_micro").head().getLong(0))
-    }.longValue()
+    val logp0 = graft.SessionCache.get(spark, s"$uri/meta", "logp0") {
+      graft.SessionCache.parquet(spark, s"$uri/meta")
+        .select("logp0_micro").head().getLong(0)
+    }
     // one row per DISTINCT gram per document ([[CharTrigramCounts]]), not
     // one per character — the partial aggregation that keeps join-probe
     // volume at `Σ distinct grams` while `Σ cnt·lp` reproduces the

@@ -65,7 +65,7 @@ object QualityClassifier {
     require(quantile > 0 && quantile < 0.5,
       s"graft: label quantile must be in (0, 0.5), got $quantile")
     val spark = docs.sparkSession
-    graft.index.VectorIndex.invalidateReadsUnder(uri)
+    graft.SessionCache.invalidateUnder(uri)
     val labeled = weakLabels(docs, textCol, idCol, quantile)
     val assembled = new VectorAssembler()
       .setInputCols(featureNames.toArray)
@@ -182,11 +182,11 @@ object QualityClassifier {
   }
 
   /** The persisted weight map (features + intercept), collected through
-    * the artifact memo (one collect job per scoring query otherwise;
+    * SessionCache (one collect job per scoring query otherwise;
     * invalidated with the model uri). */
   def readWeights(spark: SparkSession, uri: String): Map[String, Double] =
-    graft.index.VectorIndex.cachedArtifact(spark, s"$uri/weights#weights") {
-      val m = graft.index.VectorIndex.readVersioned(spark, s"$uri/weights")
+    graft.SessionCache.get(spark, s"$uri/weights", "weights") {
+      val m = graft.SessionCache.parquet(spark, s"$uri/weights")
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       val missing = (featureNames :+ InterceptKey).filterNot(m.contains)
       require(missing.isEmpty,

@@ -1,13 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{Ingest, VamanaKernels, VectorIndex}
+import graft.index.VamanaKernels
 import graft.operators.DistanceMetric
 
 /** Focused gates for the round-13 optimization rewrites: each pins an
@@ -17,9 +15,6 @@ import graft.operators.DistanceMetric
   */
 class R13OptimizationSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def tmp(): String =
-    Files.createTempDirectory("graft_r13").toString
 
   private val rnd = new scala.util.Random(1234)
   private def pts(n: Int, d: Int): Array[Array[Float]] =
@@ -173,23 +168,6 @@ class R13OptimizationSpec extends AnyFunSuite {
     finally spark.conf.unset(Par.MinComputeParallelismKey)
     // row set unchanged by the spread
     assert(Par.spread(one).agg(sum("id")).head().getLong(0) === 4950L)
-  }
-
-  // ---- session version-read cache: memoized until a delete invalidates
-
-  test("readVersioned memoizes per (session, path) and deleteRecursively invalidates") {
-    import spark.implicits._
-    val dir = tmp() + "/base/v=1000"
-    Seq(1L, 2L, 3L).toDF("x").write.parquet(dir)
-    val a = VectorIndex.readVersioned(spark, dir)
-    val b = VectorIndex.readVersioned(spark, dir)
-    assert(a eq b, "second read must be the memoized relation")
-    assert(a.count() === 3)
-    graft.index.Storage.deleteRecursively(dir)
-    Seq(1L, 2L, 3L, 4L).toDF("x").write.parquet(dir)
-    val c = VectorIndex.readVersioned(spark, dir)
-    assert(!(a eq c), "a delete under the path must invalidate the cache")
-    assert(c.count() === 4)
   }
 
   // ---- KnnGraph pair salting: pure re-bucketing, results unchanged

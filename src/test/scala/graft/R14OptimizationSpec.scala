@@ -10,9 +10,9 @@ import graft.operators.DistanceMetric
 
 /** Focused gates for the round-14 optimization rewrites: maintenance-op
   * batching must be row-identical to the sequential public API it
-  * replaces, the memoized updates-log reads must be re-armed by every
-  * mutator (including Storage.move), and the compaction no-op skip must
-  * not change what a compaction pass leaves on disk.
+  * replaces, and the compaction no-op skip must not change what a
+  * compaction pass leaves on disk. The memo re-arming gates live in
+  * [[SessionCacheSpec]].
   */
 class R14OptimizationSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -99,47 +99,6 @@ class R14OptimizationSpec extends AnyFunSuite {
       resultRows(VectorIndex.open(spark, uSeq).query(q, 8)))
   }
 
-  // ---- memoized updates-log reads: every mutator re-arms the cache
-
-  test("a query after updateBatch sees the new log rows despite the memoized probe") {
-    val base = vecsDf(80)
-    val u = tmp()
-    val idx = Ingest.ingest(spark, u, base, "FLAT", DistanceMetric.L2,
-      timestamp = 1000L)
-    val q = queries(base, 1)
-    // arm the (session, path, window) memo: no updates yet -> base-only
-    val before = resultRows(VectorIndex.open(spark, u).query(q, 3))
-    assert(before.nonEmpty)
-    // a new id whose vector EQUALS query 0's vector must become its top hit
-    import spark.implicits._
-    val qv = base.where(col("external_id") === 0)
-      .select(col("vector")).head().getSeq[Float](0).toArray
-    idx.updateBatch(Seq((7777L, qv)).toDF("external_id", "vector"), ts = 1100L)
-    val after = resultRows(VectorIndex.open(spark, u).query(q, 3))
-    assert(after.contains((0L, 7777L)),
-      s"log write invisible through the memoized probe: $after")
-    // and deleteBatch re-arms it again
-    idx.deleteBatch(Seq(Tuple1(7777L)).toDF("external_id"), ts = 1200L)
-    val afterDel = resultRows(VectorIndex.open(spark, u).query(q, 3))
-    assert(!afterDel.contains((0L, 7777L)))
-  }
-
-  test("Storage.move invalidates memoized reads under the source prefix") {
-    import spark.implicits._
-    val root = tmp()
-    val a = s"$root/a"
-    val b = s"$root/b"
-    Seq((1L, "one")).toDF("id", "tag").write.parquet(a)
-    // arm the memo on the source path
-    assert(VectorIndex.readVersioned(spark, a).count() == 1)
-    // move it aside WITHOUT any manual invalidation, then write fresh
-    // content at the same path: the move alone must have re-armed `a`
-    Storage.move(a, b)
-    Seq((1L, "one"), (2L, "two")).toDF("id", "tag").write.parquet(a)
-    assert(VectorIndex.readVersioned(spark, a).count() == 2,
-      "stale relation served after Storage.move re-pointed the path")
-  }
-
   // ---- compaction no-op skip
 
   test("vacuum after a compaction is a no-op; the >threshold compaction still fires") {
@@ -179,32 +138,4 @@ class R14OptimizationSpec extends AnyFunSuite {
     assert(top.map(_._2).toSeq == Seq(0, 1, 3, 2))
   }
 
-  // ---- Par.spread: memoized decision keeps the floor semantics
-
-  test("Par.spread raises a below-floor frame to the floor, repeatedly") {
-    import spark.implicits._
-    val narrow = (0 until 50).map(i => (i, s"t$i")).toDF("id", "t").coalesce(1)
-    val floor = spark.sparkContext.defaultParallelism
-    // twice: the second call answers from the memo and must decide the same
-    assert(Par.spread(narrow).rdd.getNumPartitions >= math.min(floor, 50))
-    assert(Par.spread(narrow).rdd.getNumPartitions >= math.min(floor, 50))
-    val wide = (0 until 50).map(i => (i, s"t$i")).toDF("id", "t")
-      .repartition(floor + 2)
-    assert(Par.spread(wide).rdd.getNumPartitions == floor + 2)
-    assert(Par.spread(wide).rdd.getNumPartitions == floor + 2)
-  }
-
-  // ---- EventOps invalidation hook
-
-  test("EventOps.invalidate re-arms the memoized events read") {
-    import spark.implicits._
-    val dir = tmp()
-    Seq((1L, "a")).toDF("ts", "event_type")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    assert(graft.streaming.EventOps.loadEvents(spark, dir).count() == 1)
-    Seq((1L, "a"), (2L, "b")).toDF("ts", "event_type")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    graft.streaming.EventOps.invalidate(dir)
-    assert(graft.streaming.EventOps.loadEvents(spark, dir).count() == 2)
-  }
 }

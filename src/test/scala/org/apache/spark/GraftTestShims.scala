@@ -6,4 +6,8 @@ package org.apache.spark
   * shapes). */
 object GraftTestShims {
   def clearCheckpointDir(sc: SparkContext): Unit = sc.checkpointDir = None
+
+  /** Block until every posted listener event has been delivered, so a
+    * spec's listener has seen all jobs started before the call. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

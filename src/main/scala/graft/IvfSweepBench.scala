@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{Ingest, VectorIndex}
+import graft.index.{Ingest, IvfRerankIndex, VectorIndex}
 import graft.operators.{DistanceMetric, Knn}
 
 /** The reference-scale IVF_FLAT benchmark (reference:
@@ -98,129 +98,67 @@ object IvfSweepBench {
     if (mode == "flat" || mode == "sqrtn") {
       graft.index.Storage.deleteRecursively(corpusPath); return
     }
-    // mode "pq10m": ONLY the PQ reference-default geometry (the 10M-scale
-    // run — the full k_factor grid is the 1M sweep's job)
-    if (mode == "pq10m") {
-      val uriPq = java.nio.file.Files.createTempDirectory("ivf_sweep_pq10m").toString
+    // The lossy codecs at the √N geometry: k_factor (exact-re-rank
+    // candidate inflation) × nprobe, the reference's PQ accuracy/latency
+    // curve (local-benchmarks.py PQ sweeps; k_factor: ivf_pq_index.py:40-45).
+    def build(indexType: String): (IvfRerankIndex, Double) = {
+      val uri = java.nio.file.Files.createTempDirectory(
+        s"ivf_sweep_${indexType.toLowerCase}").toString
       val t0 = System.nanoTime()
-      Ingest.ingest(spark, uriPq, big, "IVF_PQ", DistanceMetric.L2,
+      Ingest.ingest(spark, uri, big, indexType, DistanceMetric.L2,
         timestamp = 1000L, partitions = Some(sqrtN))
-      val buildPqS = (System.nanoTime() - t0) / 1e9
-      val pq = VectorIndex.open(spark, uriPq).asInstanceOf[graft.index.IvfPqIndex]
-      val sqrtParts = math.max(1, math.sqrt(sqrtN.toDouble).toInt)
-      for (kf <- Seq(4.0f, 16.0f, 32.0f); nprobe <- Seq(sqrtParts)) {
-        val t1 = System.nanoTime()
-        val got = SweepFixture.groundTruth(pq.queryBase(queries, k, nprobe, kf, None))
-        val queryS = (System.nanoTime() - t1) / 1e9
-        val recall = SweepFixture.recall(exact, got, k)
-        println(f"SWEEP_PQ {partitions: $sqrtN, nprobe: $nprobe, k_factor: $kf%.0f, " +
-          f"recall: $recall%.4f, query_s: $queryS%.2f, build_s: $buildPqS%.1f}")
-      }
-      graft.index.Storage.deleteRecursively(uriPq)
-      graft.index.Storage.deleteRecursively(corpusPath)
-      return
+      (VectorIndex.open(spark, uri).asInstanceOf[IvfRerankIndex], (System.nanoTime() - t0) / 1e9)
     }
-    // mode "pqauto": the k_factor CALIBRATION audit — build IVF_PQ (and
-    // IVF_SQ8) at the √N geometry, run the build-time auto-calibration
-    // (graft.index.KFactorCalibration: saturated-pool agreement at the
-    // default nprobe), then sweep the full grid against EXACT ground truth
-    // and report where the measured knee sits. AUTO is validated when it
-    // lands within one grid step of the knee — at 1M AND 10M, where the
-    // measured knees differ by a decade (PQ 4 vs 32, PERF.md).
-    if (mode == "pqauto") {
-      val uriPq = java.nio.file.Files.createTempDirectory("ivf_sweep_pqauto").toString
-      val t0b = System.nanoTime()
-      Ingest.ingest(spark, uriPq, big, "IVF_PQ", DistanceMetric.L2,
-        timestamp = 1000L, partitions = Some(sqrtN))
-      val buildPqS = (System.nanoTime() - t0b) / 1e9
-      val pq = VectorIndex.open(spark, uriPq).asInstanceOf[graft.index.IvfPqIndex]
-      val tCal = System.nanoTime()
-      val autoPq = pq.calibrateKFactor(k = k)
-      println(f"SWEEP_PQ_AUTO {partitions: $sqrtN, auto_k_factor: $autoPq%.0f, " +
-        f"calib_s: ${(System.nanoTime() - tCal) / 1e9}%.1f, build_s: $buildPqS%.1f}")
-      val grid = graft.index.KFactorCalibration.Grid
-      val recalls = grid.map { kf =>
-        val t1 = System.nanoTime()
-        val got = SweepFixture.groundTruth(pq.queryBase(queries, k, 0, kf, None))
-        val queryS = (System.nanoTime() - t1) / 1e9
-        val recall = SweepFixture.recall(exact, got, k)
-        println(f"SWEEP_PQ {partitions: $sqrtN, nprobe: 0, k_factor: $kf%.0f, " +
-          f"recall: $recall%.4f, query_s: $queryS%.2f}")
-        kf -> recall
-      }
-      val maxR = recalls.map(_._2).max
-      val knee = recalls.find(_._2 >= 0.95 * maxR).map(_._1).getOrElse(grid.max)
-      println(f"SWEEP_PQ_KNEE {measured_knee: $knee%.0f, auto: $autoPq%.0f, " +
-        f"within_one_step: ${autoPq >= knee / 2 && autoPq <= knee * 2}}")
-      graft.index.Storage.deleteRecursively(uriPq)
-
-      val uriSq = java.nio.file.Files.createTempDirectory("ivf_sweep_sq8auto").toString
-      val t0s = System.nanoTime()
-      Ingest.ingest(spark, uriSq, big, "IVF_SQ8", DistanceMetric.L2,
-        timestamp = 1000L, partitions = Some(sqrtN))
-      val buildSqS = (System.nanoTime() - t0s) / 1e9
-      val sq = VectorIndex.open(spark, uriSq).asInstanceOf[graft.index.IvfSq8Index]
-      val tCal2 = System.nanoTime()
-      val autoSq = sq.calibrateKFactor(k = k)
-      println(f"SWEEP_SQ8_AUTO {partitions: $sqrtN, auto_k_factor: $autoSq%.0f, " +
-        f"calib_s: ${(System.nanoTime() - tCal2) / 1e9}%.1f, build_s: $buildSqS%.1f}")
-      val recallsSq = Seq(1.0f, 2.0f, 4.0f, 8.0f).map { kf =>
-        val got = SweepFixture.groundTruth(sq.queryBase(queries, k, 0, kf, None))
-        val recall = SweepFixture.recall(exact, got, k)
-        println(f"SWEEP_SQ8 {partitions: $sqrtN, nprobe: 0, k_factor: $kf%.0f, " +
-          f"recall: $recall%.4f}")
-        kf -> recall
-      }
-      val maxRs = recallsSq.map(_._2).max
-      val kneeSq = recallsSq.find(_._2 >= 0.95 * maxRs).map(_._1).getOrElse(8.0f)
-      println(f"SWEEP_SQ8_KNEE {measured_knee: $kneeSq%.0f, auto: $autoSq%.0f, " +
-        f"within_one_step: ${autoSq >= kneeSq / 2 && autoSq <= kneeSq * 2}}")
-      graft.index.Storage.deleteRecursively(uriSq)
-      graft.index.Storage.deleteRecursively(corpusPath)
-      return
-    }
-    // mode "sq8": IVF_SQ8 at the √N geometry — k_factor × nprobe recall
-    // for the scalar-quantized candidate scan. Expectation (and the
-    // reason SQ8 exists next to PQ): per-dim rounding error is tiny vs
-    // PQ's 256-cell subspace collapse, so the curve should sit at the
-    // IVF_FLAT ceiling from small k_factor even where PQ needs 16–32.
-    if (mode == "sq8") {
-      val uriSq = java.nio.file.Files.createTempDirectory("ivf_sweep_sq8").toString
-      val t0 = System.nanoTime()
-      Ingest.ingest(spark, uriSq, big, "IVF_SQ8", DistanceMetric.L2,
-        timestamp = 1000L, partitions = Some(sqrtN))
-      val buildSqS = (System.nanoTime() - t0) / 1e9
-      val sq = VectorIndex.open(spark, uriSq).asInstanceOf[graft.index.IvfSq8Index]
-      for (kf <- Seq(1.0f, 2.0f, 4.0f); nprobe <- Seq(8, 31)) {
-        val t1 = System.nanoTime()
-        val got = SweepFixture.groundTruth(sq.queryBase(queries, k, nprobe, kf, None))
-        val queryS = (System.nanoTime() - t1) / 1e9
-        val recall = SweepFixture.recall(exact, got, k)
-        println(f"SWEEP_SQ8 {partitions: $sqrtN, nprobe: $nprobe, k_factor: $kf%.0f, " +
-          f"recall: $recall%.4f, query_s: $queryS%.2f, build_s: $buildSqS%.1f}")
-      }
-      graft.index.Storage.deleteRecursively(uriSq)
-      graft.index.Storage.deleteRecursively(corpusPath)
-      return
-    }
-    // IVF_PQ at the √N geometry: k_factor (exact-re-rank candidate
-    // inflation) × nprobe, the reference's PQ accuracy/latency curve
-    // (local-benchmarks.py PQ sweeps; k_factor: ivf_pq_index.py:40-45)
-    val uriPq = java.nio.file.Files.createTempDirectory("ivf_sweep_pq").toString
-    val t0 = System.nanoTime()
-    Ingest.ingest(spark, uriPq, big, "IVF_PQ", DistanceMetric.L2,
-      timestamp = 1000L, partitions = Some(sqrtN))
-    val buildPqS = (System.nanoTime() - t0) / 1e9
-    val pq = VectorIndex.open(spark, uriPq).asInstanceOf[graft.index.IvfPqIndex]
-    for (kf <- Seq(1.0f, 2.0f, 4.0f, 8.0f); nprobe <- Seq(8, 31)) {
+    /** One (k_factor, nprobe) cell: prints a `<label> {...}` line, returns recall. */
+    def cell(idx: IvfRerankIndex, label: String, buildS: Double, nprobe: Int,
+        kf: Float): Double = {
       val t1 = System.nanoTime()
-      val got = SweepFixture.groundTruth(pq.queryBase(queries, k, nprobe, kf, None))
+      val got = SweepFixture.groundTruth(idx.queryBase(queries, k, nprobe, kf, None))
       val queryS = (System.nanoTime() - t1) / 1e9
       val recall = SweepFixture.recall(exact, got, k)
-      println(f"SWEEP_PQ {partitions: $sqrtN, nprobe: $nprobe, k_factor: $kf%.0f, " +
-        f"recall: $recall%.4f, query_s: $queryS%.2f, build_s: $buildPqS%.1f}")
+      println(f"$label {partitions: $sqrtN, nprobe: $nprobe, k_factor: $kf%.0f, " +
+        f"recall: $recall%.4f, query_s: $queryS%.2f, build_s: $buildS%.1f}")
+      recall
     }
-    graft.index.Storage.deleteRecursively(uriPq)
+    def sweep(indexType: String, label: String, kfs: Seq[Float], probes: Seq[Int]): Unit = {
+      val (idx, buildS) = build(indexType)
+      for (kf <- kfs; nprobe <- probes) cell(idx, label, buildS, nprobe, kf)
+      graft.index.Storage.deleteRecursively(idx.uri)
+    }
+    mode match {
+      // "pq10m": ONLY the PQ reference-default geometry (the 10M-scale run
+      // — the full k_factor grid is the 1M sweep's job)
+      case "pq10m" => sweep("IVF_PQ", "SWEEP_PQ", Seq(4f, 16f, 32f),
+        Seq(math.max(1, math.sqrt(sqrtN.toDouble).toInt)))
+      // "sq8": per-dim rounding error is tiny vs PQ's 256-cell subspace
+      // collapse, so the curve should sit at the IVF_FLAT ceiling from
+      // small k_factor even where PQ needs 16–32
+      case "sq8" => sweep("IVF_SQ8", "SWEEP_SQ8", Seq(1f, 2f, 4f), Seq(8, 31))
+      // "pqauto": the k_factor CALIBRATION audit — run the build-time
+      // auto-calibration (graft.index.KFactorCalibration: saturated-pool
+      // agreement at the default nprobe), then sweep the grid against
+      // EXACT ground truth and report where the measured knee sits. AUTO
+      // is validated when it lands within one grid step of the knee — at
+      // 1M AND 10M, where the measured knees differ by a decade (PQ 4 vs
+      // 32, PERF.md).
+      case "pqauto" =>
+        for ((indexType, label, grid) <- Seq(
+            ("IVF_PQ", "SWEEP_PQ", graft.index.KFactorCalibration.Grid),
+            ("IVF_SQ8", "SWEEP_SQ8", Seq(1f, 2f, 4f, 8f)))) {
+          val (idx, buildS) = build(indexType)
+          val tCal = System.nanoTime()
+          val auto = idx.calibrateKFactor(k = k)
+          println(f"${label}_AUTO {partitions: $sqrtN, auto_k_factor: $auto%.0f, " +
+            f"calib_s: ${(System.nanoTime() - tCal) / 1e9}%.1f, build_s: $buildS%.1f}")
+          val recalls = grid.map(kf => kf -> cell(idx, label, buildS, 0, kf))
+          val maxR = recalls.map(_._2).max
+          val knee = recalls.find(_._2 >= 0.95 * maxR).map(_._1).getOrElse(grid.max)
+          println(f"${label}_KNEE {measured_knee: $knee%.0f, auto: $auto%.0f, " +
+            f"within_one_step: ${auto >= knee / 2 && auto <= knee * 2}}")
+          graft.index.Storage.deleteRecursively(idx.uri)
+        }
+      case _ => sweep("IVF_PQ", "SWEEP_PQ", Seq(1f, 2f, 4f, 8f), Seq(8, 31))
+    }
     graft.index.Storage.deleteRecursively(corpusPath)
   }
 

@@ -1,8 +1,11 @@
 package graft
 
+import java.lang.ref.WeakReference
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** The engine's one memo for values that stay valid for the life of a
   * SparkSession. The reference keeps a long-lived `Index` that holds its
@@ -26,10 +29,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Contract:
   *   - Entries are per session: sibling sessions (`newSession()`) share
-  *     nothing. The per-session maps are weakly keyed by the session; since
-  *     a cached DataFrame refers to its session, a session's map is also
-  *     dropped once its SparkContext is stopped (swept when a new session
-  *     first uses the cache).
+  *     nothing. A cached DataFrame refers to its session, so nothing global
+  *     holds the entries strongly: the session's own optimizer-rule list
+  *     holds them (a no-op rule, [[Entries]]), and the global map holds the
+  *     session and its entries weakly. A session that is no longer
+  *     referenced — a dropped sibling, a stopped session — is collected
+  *     with its entries. Replacing `experimental.extraOptimizations`
+  *     wholesale drops the entries too; the only cost is a re-read.
   *   - A session holds at most [[Cap]] entries. A store past the cap clears
   *     that session's map first; the only cost is a re-list or re-collect.
   *   - A miss runs `make` with no lock held, so `make` may call [[get]]
@@ -53,8 +59,15 @@ object SessionCache {
 
   private final case class Key(path: String, tag: Any)
 
-  private val sessions =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Key, AnyRef]]()
+  /** One session's entries. A rule so the session can own it: it sits in
+    * the session's `experimental.extraOptimizations` and leaves every plan
+    * as it is. */
+  private final class Entries extends Rule[LogicalPlan] {
+    val map = new ConcurrentHashMap[Key, AnyRef]()
+    override def apply(plan: LogicalPlan): LogicalPlan = plan
+  }
+
+  private val sessions = new java.util.WeakHashMap[SparkSession, WeakReference[Entries]]()
 
   /** The value memoized for (`spark`, `path`, `tag`), made on a miss. */
   def get[T](spark: SparkSession, path: String, tag: Any)(make: => T): T = {
@@ -78,20 +91,25 @@ object SessionCache {
   /** Drop every session's entries at `prefix` or under it. */
   def invalidateUnder(prefix: String): Unit = {
     require(prefix.nonEmpty, "graft: cannot invalidate the empty path")
-    val maps = sessions.synchronized(new java.util.ArrayList(sessions.values()))
-    maps.forEach { m =>
-      m.keySet.removeIf(k => k.path == prefix || k.path.startsWith(prefix + "/"))
+    val held = sessions.synchronized(new java.util.ArrayList(sessions.values()))
+    held.forEach { ref =>
+      val e = ref.get
+      if (e != null)
+        e.map.keySet.removeIf(k => k.path == prefix || k.path.startsWith(prefix + "/"))
     }
   }
 
   private def entries(spark: SparkSession): ConcurrentHashMap[Key, AnyRef] =
     sessions.synchronized {
-      var m = sessions.get(spark)
-      if (m == null) {
-        sessions.keySet.removeIf(_.sparkContext.isStopped)
-        m = new ConcurrentHashMap[Key, AnyRef]()
-        sessions.put(spark, m)
+      val ref = sessions.get(spark)
+      val held = if (ref == null) null else ref.get
+      if (held != null) held.map
+      else {
+        val e = new Entries
+        val x = spark.experimental
+        x.extraOptimizations = x.extraOptimizations :+ e
+        sessions.put(spark, new WeakReference(e))
+        e.map
       }
-      m
     }
 }

@@ -187,8 +187,9 @@ object SparkEntry {
     * SIMD caveat: the shortlist BOUNDARY rides float dot values computed
     * independently by the index kernel and DuckDB's list_inner_product; a
     * reassociated SIMD kernel (`spark.graft.simd`) could wobble a
-    * near-boundary candidate in or out, changing the surfaced set. Driver
-    * runs leave SIMD at its default (off), and the re-rank itself is
+    * near-boundary candidate in or out, changing the surfaced set. SIMD is
+    * on by default in any JVM that has `jdk.incubator.vector` (build.sbt
+    * adds the module to every forked run); the re-rank itself is
     * strict-fold bit-pinned regardless. */
   private val MaxSimQObjs = 8
   private val MaxSimShortlist = 16

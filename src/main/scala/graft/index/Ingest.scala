@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{Vector => MlVector}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{vector_normalize, NearestCentroid, PqEncode}
@@ -382,129 +382,124 @@ object Ingest {
         base.select(col("external_id"),
             graft.functions.sign_pack(col("vector")).as("bits"))
           .write.mode("overwrite").parquet(s"$uri/sketch/v=$timestamp")
-      case "IVF_FLAT" =>
+      case "IVF_FLAT" | "IVF_SQ8" | "IVF_PQ" =>
         // copy-centroids reuse on consolidation (reference: index.py:503-577
         // `copy_centroids_uri` + partitions check) skips re-training; a
         // separate training source mirrors the reference's
         // training_source_uri (ingestion.py:42 params).
-        val trainDf = trainingSource.map(_.select(
-          col("vector").cast("array<float>").as("vector"))).getOrElse(base)
-        val centroids = presetCentroids.getOrElse(trainCentroids(trainDf, numParts,
-          trainingSampleSize.getOrElse(autoTrainingSize(count, numParts)),
-          totalRows = if (trainingSource.isEmpty) count else -1L))
-        writeCentroids(spark, uri, timestamp, centroids)
-        val assigned = base.withColumn("partition_id",
-          toColumn(NearestCentroid(toExpression(col("vector")), centroids)))
-        clusterForWrite(packVector(assigned), "partition_id", numParts)
-          .write.mode("overwrite")
-          .partitionBy("partition_id")
-          .parquet(s"$uri/base/v=$timestamp")
-      case "IVF_SQ8" =>
-        // Scalar-quantized IVF: the IVF_FLAT layout plus a one-byte-per-dim
-        // `sq` codes column stored BESIDE the raw vectors in the same
-        // parquet — parquet is columnar, so the candidate scan reads only
-        // (external_id, sq) at 1 byte/dim (4x less IO than floats) while
-        // the exact re-rank fetches the float column for candidate rows
-        // only. The reference's lossy-scan story is IVF_PQ
-        // (src/include/index/ivf_pq_index.h); SQ8 is the higher-fidelity
-        // 1-byte/dim point on the same candidate-then-re-rank curve.
-        require(metric != DistanceMetric.InnerProduct,
-          "IVF_SQ8 supports SOS/L2/COSINE (per-dim affine codes cannot " +
-            "order INNER_PRODUCT against the trained range); use FLAT/IVF_FLAT")
-        require(!byteDtype,
-          s"IVF_SQ8 requires dtype float32, got $dtype (byte inputs are " +
-            "already 1 byte/dim — quantization buys nothing)")
-        val trainDfSq = trainingSource.map(_.select(
-          col("vector").cast("array<float>").as("vector"))).getOrElse(base)
-        val sqCentroids = presetCentroids.getOrElse(trainCentroids(trainDfSq, numParts,
-          trainingSampleSize.getOrElse(autoTrainingSize(count, numParts)),
-          totalRows = if (trainingSource.isEmpty) count else -1L))
-        writeCentroids(spark, uri, timestamp, sqCentroids)
-        // per-dim (min, max) over the FULL base in ONE pass: the posexplode
-        // rows never shuffle — partial aggregation reduces each task to
-        // `dims` keys before the exchange, so the driver collects dims rows.
-        // Unlike the coarse centroids (trainable on `trainingSource`), the
-        // quantizer range is DELIBERATELY computed over the base itself:
-        // a range must cover the stored vectors (a training-sample range
-        // would clip every base value outside it), and the one-pass min/max
-        // costs a scan the ingest already pays. The exact range is
-        // single-outlier-sensitive — one extreme value per dim stretches
-        // scale_d and coarsens resolution for every other vector — so
-        // `spark.graft.sq8RangeQuantile` (q in (0.5, 1.0], default 1.0 =
-        // exact) optionally clips to the [1-q, q] per-dim quantiles;
-        // out-of-range values saturate at code 0/255 ([[graft.functions.Sq8Encode]]
-        // clamps), trading their accuracy for finer codes everywhere else.
-        val rangeQ = graft.Conf.double(spark, Ingest.Sq8RangeQuantileKey, 1.0)
-        require(rangeQ > 0.5 && rangeQ <= 1.0,
-          s"graft: ${Ingest.Sq8RangeQuantileKey} must be in (0.5, 1.0], got $rangeQ")
-        val dimStats = base.select(posexplode(col("vector")).as(Seq("dim", "x")))
-        val ranges = (if (rangeQ >= 1.0)
-          dimStats.groupBy("dim").agg(
-            min("x").cast("float").as("lo"), max("x").cast("float").as("hi"))
-        else
-          dimStats.groupBy("dim").agg(
-            percentile_approx(col("x"), lit(1.0 - rangeQ), lit(10000))
-              .cast("float").as("lo"),
-            percentile_approx(col("x"), lit(rangeQ), lit(10000))
-              .cast("float").as("hi")))
-          .collect().map(r => (r.getInt(0), r.getFloat(1), r.getFloat(2)))
-          .sortBy(_._1)
-        val sqMins = ranges.map(_._2)
-        val sqScales = ranges.map { case (_, lo, hi) => (hi - lo) / 255.0f }
-        writeSqParams(spark, uri, timestamp, sqMins, sqScales)
-        val assignedSq = base
-          .withColumn("partition_id",
-            toColumn(NearestCentroid(toExpression(col("vector")), sqCentroids)))
-          .withColumn("sq",
-            toColumn(graft.functions.Sq8Encode(
-              toExpression(col("vector")), sqMins, sqScales)))
-        clusterForWrite(assignedSq, "partition_id", numParts)
-          .write.mode("overwrite")
-          .partitionBy("partition_id")
-          .parquet(s"$uri/base/v=$timestamp")
-      case "IVF_PQ" =>
-        // reference default num_subspaces = dims/4 in its test config
-        // (test_ingestion.py:219-274); codebooks are per-subspace k-means
-        // with 256 codes (bits=8), ivf_pq_index.h:555-608.
-        mSubspaces = numSubspaces.getOrElse(math.max(1, dims / 4))
-        require(dims % mSubspaces == 0,
-          s"num_subspaces $mSubspaces must divide dimensions $dims")
-        require(metric == DistanceMetric.SumOfSquares || metric == DistanceMetric.L2,
-          "IVF_PQ supports SUM_OF_SQUARES / L2 only (reference ivf_pq_index.py:212-218)")
-        val sampleSize = trainingSampleSize.getOrElse(autoTrainingSize(count, numParts))
-        // one sample feeds centroid training AND all m PQ sub-fits (m+1
-        // independent k-means over the same small frame). Under the local-
-        // training gate the sample is collected ONCE and all fits run on the
-        // driver (see LocalKMeans — the reference's centralised-training
-        // mode); past the gate, one cached frame feeds concurrent MLlib fits.
-        val trainSample = trainingSample(base, sampleSize, count).select("vector")
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val (centroids, codebooks) = collectIfSmall(trainSample) match {
-          case Some(pts) =>
-            val centF = Future(trainCentroidsLocal(pts, numParts))
-            val cbF = Future(trainPqCodebooksLocal(pts, mSubspaces, dims / mSubspaces))
-            (Await.result(centF, Duration.Inf), Await.result(cbF, Duration.Inf))
-          case None =>
-            val cached = trainSample.cache()
-            try {
-              val centF = Future(trainCentroidsDistributed(cached, numParts))
-              val cbF = Future(
-                trainPqCodebooksDistributed(cached, mSubspaces, dims / mSubspaces))
-              (Await.result(centF, Duration.Inf), Await.result(cbF, Duration.Inf))
-            } finally cached.unpersist()
+        def ivfCentroids(): Array[Array[Float]] = presetCentroids.getOrElse {
+          val trainDf = trainingSource.map(_.select(
+            col("vector").cast("array<float>").as("vector"))).getOrElse(base)
+          trainCentroids(trainDf, numParts,
+            trainingSampleSize.getOrElse(autoTrainingSize(count, numParts)),
+            totalRows = if (trainingSource.isEmpty) count else -1L)
         }
+        // per codec: the coarse centroids, plus the code columns stored
+        // beside each vector (their trained parameters written here)
+        val (centroids, codeCols): (Array[Array[Float]], Seq[(String, Column)]) =
+          indexType match {
+            case "IVF_FLAT" => (ivfCentroids(), Nil)
+            case "IVF_SQ8" =>
+              // Scalar-quantized IVF: a one-byte-per-dim `sq` codes column
+              // stored BESIDE the raw vectors in the same parquet — parquet
+              // is columnar, so the candidate scan reads only (external_id,
+              // sq) at 1 byte/dim (4x less IO than floats) while the exact
+              // re-rank fetches the float column for candidate rows only.
+              // The reference's lossy-scan story is IVF_PQ
+              // (src/include/index/ivf_pq_index.h); SQ8 is the
+              // higher-fidelity 1-byte/dim point on the same
+              // candidate-then-re-rank curve.
+              require(metric != DistanceMetric.InnerProduct,
+                "IVF_SQ8 supports SOS/L2/COSINE (per-dim affine codes cannot " +
+                  "order INNER_PRODUCT against the trained range); use FLAT/IVF_FLAT")
+              require(!byteDtype,
+                s"IVF_SQ8 requires dtype float32, got $dtype (byte inputs are " +
+                  "already 1 byte/dim — quantization buys nothing)")
+              val sqCentroids = ivfCentroids()
+              // per-dim (min, max) over the FULL base in ONE pass: the
+              // posexplode rows never shuffle — partial aggregation reduces
+              // each task to `dims` keys before the exchange, so the driver
+              // collects dims rows. Unlike the coarse centroids (trainable
+              // on `trainingSource`), the quantizer range is DELIBERATELY
+              // computed over the base itself: a range must cover the
+              // stored vectors (a training-sample range would clip every
+              // base value outside it), and the one-pass min/max costs a
+              // scan the ingest already pays. The exact range is
+              // single-outlier-sensitive — one extreme value per dim
+              // stretches scale_d and coarsens resolution for every other
+              // vector — so `spark.graft.sq8RangeQuantile` (q in (0.5, 1.0],
+              // default 1.0 = exact) optionally clips to the [1-q, q]
+              // per-dim quantiles; out-of-range values saturate at code
+              // 0/255 ([[graft.functions.Sq8Encode]] clamps), trading their
+              // accuracy for finer codes everywhere else.
+              val rangeQ = graft.Conf.double(spark, Ingest.Sq8RangeQuantileKey, 1.0)
+              require(rangeQ > 0.5 && rangeQ <= 1.0,
+                s"graft: ${Ingest.Sq8RangeQuantileKey} must be in (0.5, 1.0], got $rangeQ")
+              val dimStats = base.select(posexplode(col("vector")).as(Seq("dim", "x")))
+              val ranges = (if (rangeQ >= 1.0)
+                dimStats.groupBy("dim").agg(
+                  min("x").cast("float").as("lo"), max("x").cast("float").as("hi"))
+              else
+                dimStats.groupBy("dim").agg(
+                  percentile_approx(col("x"), lit(1.0 - rangeQ), lit(10000))
+                    .cast("float").as("lo"),
+                  percentile_approx(col("x"), lit(rangeQ), lit(10000))
+                    .cast("float").as("hi")))
+                .collect().map(r => (r.getInt(0), r.getFloat(1), r.getFloat(2)))
+                .sortBy(_._1)
+              val sqMins = ranges.map(_._2)
+              val sqScales = ranges.map { case (_, lo, hi) => (hi - lo) / 255.0f }
+              writeSqParams(spark, uri, timestamp, sqMins, sqScales)
+              (sqCentroids, Seq("sq" -> toColumn(graft.functions.Sq8Encode(
+                toExpression(col("vector")), sqMins, sqScales))))
+            case _ =>
+              // IVF_PQ. Reference default num_subspaces = dims/4 in its test
+              // config (test_ingestion.py:219-274); codebooks are
+              // per-subspace k-means with 256 codes (bits=8),
+              // ivf_pq_index.h:555-608.
+              mSubspaces = numSubspaces.getOrElse(math.max(1, dims / 4))
+              require(dims % mSubspaces == 0,
+                s"num_subspaces $mSubspaces must divide dimensions $dims")
+              require(metric == DistanceMetric.SumOfSquares || metric == DistanceMetric.L2,
+                "IVF_PQ supports SUM_OF_SQUARES / L2 only (reference ivf_pq_index.py:212-218)")
+              val sampleSize = trainingSampleSize.getOrElse(autoTrainingSize(count, numParts))
+              // one sample feeds centroid training AND all m PQ sub-fits (m+1
+              // independent k-means over the same small frame). Under the
+              // local-training gate the sample is collected ONCE and all fits
+              // run on the driver (see LocalKMeans — the reference's
+              // centralised-training mode); past the gate, one cached frame
+              // feeds concurrent MLlib fits. Preset centroids skip their fit;
+              // the codebooks always retrain on the (merged) base.
+              val trainSample = trainingSample(base, sampleSize, count).select("vector")
+              import scala.concurrent.{Await, Future}
+              import scala.concurrent.ExecutionContext.Implicits.global
+              import scala.concurrent.duration.Duration
+              val (pqCentroids, codebooks) = collectIfSmall(trainSample) match {
+                case Some(pts) =>
+                  val centF = Future(
+                    presetCentroids.getOrElse(trainCentroidsLocal(pts, numParts)))
+                  val cbF = Future(trainPqCodebooksLocal(pts, mSubspaces, dims / mSubspaces))
+                  (Await.result(centF, Duration.Inf), Await.result(cbF, Duration.Inf))
+                case None =>
+                  val cached = trainSample.cache()
+                  try {
+                    val centF = Future(
+                      presetCentroids.getOrElse(trainCentroidsDistributed(cached, numParts)))
+                    val cbF = Future(
+                      trainPqCodebooksDistributed(cached, mSubspaces, dims / mSubspaces))
+                    (Await.result(centF, Duration.Inf), Await.result(cbF, Duration.Inf))
+                  } finally cached.unpersist()
+              }
+              writePqCodebooks(spark, uri, timestamp, codebooks)
+              val flatCb = flattenCodebooks(codebooks, dims / mSubspaces)
+              (pqCentroids, Seq("codes" -> toColumn(PqEncode(toExpression(col("vector")),
+                flatCb, mSubspaces, codebooks(0).length, dims / mSubspaces))))
+          }
         writeCentroids(spark, uri, timestamp, centroids)
-        writePqCodebooks(spark, uri, timestamp, codebooks)
-        val codesPer = codebooks(0).length
-        val flatCb = flattenCodebooks(codebooks, dims / mSubspaces)
-        val assigned = base
-          .withColumn("partition_id",
-            toColumn(NearestCentroid(toExpression(col("vector")), centroids)))
-          .withColumn("codes",
-            toColumn(PqEncode(toExpression(col("vector")), flatCb,
-              mSubspaces, codesPer, dims / mSubspaces)))
+        val assigned = codeCols.foldLeft(base.withColumn("partition_id",
+            toColumn(NearestCentroid(toExpression(col("vector")), centroids)))) {
+          case (df, (name, code)) => df.withColumn(name, code)
+        }
         clusterForWrite(packVector(assigned), "partition_id", numParts)
           .write.mode("overwrite")
           .partitionBy("partition_id")
@@ -648,8 +643,7 @@ object Ingest {
     // default in meta, |grid|+1 small-batch probes of the fresh index)
     if (graft.Conf.bool(spark, Ingest.AutoKFactorKey, default = false)) {
       VectorIndex.open(spark, uri) match {
-        case pq: IvfPqIndex => pq.calibrateKFactor()
-        case sq: IvfSq8Index => sq.calibrateKFactor()
+        case lossy: IvfRerankIndex => lossy.calibrateKFactor()
         case _ => () // FLAT/BINARY/IVF_FLAT/VAMANA-float re-rank exactly
       }
     }

@@ -1,6 +1,7 @@
 package graft.index
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Density-aware calibration of the exact-re-rank candidate-inflation
   * knob (`k_factor`) shared by the lossy-code query paths — IVF_PQ
@@ -69,6 +70,28 @@ object KFactorCalibration {
       }.sum
       hits >= target * total
     }.getOrElse(grid.max)
+  }
+
+  /** Calibrate `index` on its own serving path and (when `persist`)
+    * record the knee as its query default: the nq smallest base ids are the
+    * deterministic held-out batch (self-matches are fine — the knee is
+    * about pool size, not absolute recall), and `queryAt(queries, k, kf)`
+    * runs the serving path at pool factor kf. `op` names the caller in the
+    * error for an index with no ingested base. */
+  def calibrateIndex(index: VectorIndex, op: String, k: Int, nq: Int, persist: Boolean)(
+      queryAt: (DataFrame, Int, Float) => DataFrame): Float = {
+    val historyIdx = index.meta.historyIndex(index.readTimestamp)
+    require(historyIdx >= 0, s"graft: $op needs an ingested base")
+    val qs = index.baseVectors().select(col("external_id").as("qid"),
+        col("vector").as("qvec"))
+      .orderBy("qid").limit(nq).localCheckpoint()
+    val kEff = math.min(k.toLong, index.meta.baseSizes(historyIdx)).toInt
+    val kf = calibrate(g => queryAt(qs, kEff, g))
+    if (persist) {
+      IndexMeta.write(index.uri, IndexMeta.read(index.uri).copy(pqKFactor = kf))
+      graft.plans.GraftSql.onIndexMutated(index.spark, index.uri)
+    }
+    kf
   }
 
   /** Collect a (qid, id) result into per-query id sets — calibration

@@ -141,7 +141,7 @@ final class LocalSearcher private[index] (
     }
 
   /** Mirror of [[DistanceMetric.reportedDistance]] + the IVF cosine sos/2
-    * mapping (IvfFlatIndex.queryBase). */
+    * mapping ([[IvfIndex.search]]). */
   private def reportedDistance(s: Float): Float = metric match {
     case DistanceMetric.InnerProduct =>
       val d = -s

@@ -482,17 +482,8 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
     require(historyIdx >= 0, "graft: calibratePqKFactor needs an ingested base")
     require(pqCodebooks.nonEmpty,
       "graft: calibratePqKFactor needs PQ codes — run buildPqCodes() first")
-    val qs = baseVectors().select(col("external_id").as("qid"),
-        col("vector").as("qvec"))
-      .orderBy("qid").limit(nq).localCheckpoint()
-    val kEff = math.min(k.toLong, meta.baseSizes(historyIdx)).toInt
-    val kf = KFactorCalibration.calibrate(
-      g => withPqTraversal(g).queryLSearch(qs, kEff, lSearch, nprobeShards))
-    if (persist) {
-      IndexMeta.write(uri, IndexMeta.read(uri).copy(pqKFactor = kf))
-      graft.plans.GraftSql.onIndexMutated(spark, uri)
-    }
-    kf
+    KFactorCalibration.calibrateIndex(this, "calibratePqKFactor", k, nq, persist)(
+      (qs, kEff, g) => withPqTraversal(g).queryLSearch(qs, kEff, lSearch, nprobeShards))
   }
 
   /** The PERF.md-sweep default probe width for THIS build's persisted
@@ -871,9 +862,10 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
     * route/prune/cogroup skeleton as [[queryBase]], but each shard task
     * walks the graph over `pq/v=<ts>` CODES with the query's asymmetric
     * distance table (computed as an expression on the replicated query
-    * rows, exactly like [[IvfPqIndex]]'s pairs — arbitrarily large batches
-    * never build tables on the driver), and the float vectors are touched
-    * only by the final exact re-rank of the k x kFactor merged candidates.
+    * rows, exactly like the IVF probe's pairs, [[IvfIndex.probe]] —
+    * arbitrarily large batches never build tables on the driver), and the
+    * float vectors are touched only by the final exact re-rank of the
+    * k x kFactor merged candidates.
     * Approximation is two-layered (beam + ADC), compensated by lSearch and
     * kFactor; the re-rank makes reported distances exact and the result
     * gate is the same 0.85 recall floor the float path carries. */

@@ -379,11 +379,10 @@ abstract class VectorIndex(
     }
     // copy-centroids path (reference: index.py:503-577): reuse the active
     // version's centroids instead of re-training k-means.
-    val preset = if (reuseCentroids) this match {
-      case ivf: IvfFlatIndex => Some(ivf.centroids)
-      case sq: IvfSq8Index => Some(sq.centroids)
+    val preset = this match {
+      case ivf: IvfIndex if reuseCentroids => Some(ivf.centroids)
       case _ => None
-    } else None
+    }
     // VAMANA re-ingests with the SAME build shape as the active version
     // (lBuild / rMaxDegree / shard count persisted in IndexMeta) — a graph
     // built with custom parameters must not silently revert to defaults or
@@ -810,101 +809,5 @@ class BinaryIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
         .select(col("external_id").as("id"), col("bits")),
       base.select(col("external_id").as("id"), col("vector")),
       queries, k, fetchK, metric)
-  }
-}
-
-/** IVF_FLAT index (reference:
-  * apis/python/src/tiledb/vector_search/ivf_flat_index.py:189-310; C++
-  * kernels src/include/detail/ivf/qv.h).
-  *
-  * Spark mapping: vectors live in Parquet partitioned by `partition_id`, so
-  * the nprobe centroid pruning becomes a `partition_id IN (...)` predicate
-  * that Catalyst turns into physical partition pruning — only the probed
-  * partitions' files are read, the Spark equivalent of the CSR-offset probe
-  * (reference: detail/ivf/qv.h:99-153).
-  *
-  * COSINE is served by normalizing at ingestion + querying with L2, exactly
-  * like the reference (ivf_flat_index.py:254-255, ingestion.py:2616-2663).
-  */
-class IvfFlatIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
-    extends VectorIndex(spark, uri, meta, ts) {
-
-  lazy val centroids: Array[Array[Float]] =
-    if (historyIdx < 0) Array.empty
-    else graft.SessionCache.get(spark, s"$uri/centroids/v=$baseTimestamp", "centroids") {
-      readVersioned(s"$uri/centroids/v=$baseTimestamp")
-        .orderBy("partition_id")
-        .collect()
-        .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
-    }
-
-  override def baseVectors(): DataFrame =
-    if (historyIdx < 0) new FlatIndex(spark, uri, meta, ts).baseVectors()
-    else readVersioned(s"$uri/base/v=$baseTimestamp")
-      .select("external_id", "vector", "partition_id")
-
-  /** The probe metric runs on normalized vectors for COSINE. */
-  private def probeMetric: DistanceMetric = metric match {
-    case DistanceMetric.Cosine => DistanceMetric.SumOfSquares
-    case m => m
-  }
-
-  override protected def queryBase(queries: DataFrame, k: Int, nprobe0: Int,
-      allow: Option[DataFrame]): DataFrame = {
-    if (historyIdx < 0) {
-      return Knn.bruteForce(restrictTo(baseVectors(), allow), queries, k, metric,
-        idCol = "external_id", vecCol = "vector")
-    }
-    val parts = centroids.length
-    val nprobe = if (nprobe0 <= 0) math.max(1, math.sqrt(parts.toDouble).toInt)
-      else math.min(nprobe0, parts) // reference: ivf_flat_index.py:213-215,260
-    val qn = metric match {
-      case DistanceMetric.Cosine => queries.select(col("qid"),
-        vector_normalize(col("qvec")).as("qvec"))
-      case _ => queries
-    }
-    // Fully-distributed probe: the per-query top-nprobe centroid list is an
-    // expression in the plan (no driver collect — query batches can be
-    // arbitrarily large). Only the distinct ACTIVE partition ids (≤
-    // partitions ints) and their counts come back to the driver: the ids
-    // drive parquet partition pruning, the summed count sizes the join side.
-    // localCheckpoint: the pairs plan feeds both the count collect and the
-    // scoring join — one materialization pins nondeterministic query
-    // sources (else the probed and scored partition sets could disagree)
-    // and avoids re-computing a derived query frame per consumer.
-    import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-    val pairs = qn.select(col("qid"), col("qvec"),
-        explode(toColumn(graft.functions.NearestCentroids(
-          toExpression(col("qvec")), centroids, nprobe))).as("partition_id"))
-      .select("qid", "partition_id", "qvec")
-      .localCheckpoint()
-    val partCounts = pairs.groupBy("partition_id")
-      .agg(count(lit(1)).as("cnt")).collect()
-    val activeParts = partCounts.map(_.getInt(0)).sorted.toSeq
-    val pairsRows = partCounts.map(_.getLong(1)).sum
-    // partition_id IN (...) reaches the parquet scan as partition pruning;
-    // the allow-list (if any) then semi-joins the surviving rows — pruning
-    // still skips unprobed files, the filter only shrinks what is scored.
-    val pruned = restrictTo(
-      baseVectors().where(col("partition_id").isin(activeParts: _*)), allow)
-    val qscore = if (metric == DistanceMetric.Cosine) probeMetric else metric
-    // byte dtypes: asymmetric float-query vs byte-packed-vector kernels
-    val scoreFn: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-        org.apache.spark.sql.Column =
-      if (meta.dtype == "uint8" || meta.dtype == "int8")
-        graft.operators.ByteKnn.score(qscore, signed = meta.dtype == "int8")
-      else DistanceMetric.score(qscore)
-    val pairsBytes = pairsRows * (24L + 4L * meta.dimensions)
-    val scored = pruned
-      .join(VectorIndex.sizedJoinSide(spark, pairs, pairsBytes), Seq("partition_id"))
-      .select(col("qid").as("__qid"), col("external_id").as("__id"),
-        scoreFn(col("vector"), col("qvec")).as("__score"))
-    val hits = Knn.topKFromScores(scored, k, qscore)
-    metric match {
-      case DistanceMetric.Cosine =>
-        // normalized-L2 scores back to cosine distance: d_cos = sos/2
-        hits.withColumn("distance", (col("distance") / 2.0f).cast("float"))
-      case _ => hits
-    }
   }
 }

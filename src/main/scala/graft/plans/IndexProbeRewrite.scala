@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
 
 import graft.functions.{CosineDistance, DotProduct, EuclideanDistance, SumOfSquaresDistance}
-import graft.index.{IvfFlatIndex, IvfPqIndex, VamanaIndex, VectorIndex}
+import graft.index.{IvfIndex, VamanaIndex, VectorIndex}
 import graft.operators.DistanceMetric
 
 /** Registry connecting parquet base paths of IVF indexes to their centroids,
@@ -20,7 +20,7 @@ import graft.operators.DistanceMetric
   * index object; in SQL the table is all the user names). */
 object IndexCatalog {
   /** @param pidCol the scan's physical partition column the probe filter
-    *               prunes on: `partition_id` for IVF_FLAT / IVF_PQ bases,
+    *               prunes on: `partition_id` for IVF_FLAT / IVF_SQ8 / IVF_PQ bases,
     *               `shard_id` for sharded VAMANA bases. */
   final case class Entry(
       centroids: Array[Array[Float]],
@@ -112,12 +112,8 @@ object GraftSql {
     // centroids (the routed-search candidate narrowing). Unsharded VAMANA /
     // FLAT have nothing to prune — the view still works as an exact scan.
     val probeSide: Option[(Array[Array[Float]], String)] = idx match {
-      case ivf: IvfFlatIndex if ivf.centroids.nonEmpty =>
+      case ivf: IvfIndex if ivf.centroids.nonEmpty =>
         Some((ivf.centroids, "partition_id"))
-      case pq: IvfPqIndex if pq.centroids.nonEmpty =>
-        Some((pq.centroids, "partition_id"))
-      case sq: graft.index.IvfSq8Index if sq.centroids.nonEmpty =>
-        Some((sq.centroids, "partition_id"))
       case vam: VamanaIndex if vam.shardCentroids.nonEmpty =>
         Some((vam.shardCentroids, "shard_id"))
       case _ => None
@@ -182,8 +178,8 @@ object GraftSql {
   * index base table → probe plan: the top-nprobe centroid partitions for
   * the (plan-time constant) query vector become a `<pidCol> IN (...)`
   * filter directly above the scan, which Catalyst's partition pruning turns
-  * into "read only the probed partitions" — the same pruning
-  * [[graft.index.IvfFlatIndex]] performs programmatically
+  * into "read only the probed partitions" — the same pruning the shared
+  * IVF probe ([[graft.index.IvfIndex.probe]]) performs programmatically
   * (reference: detail/ivf/qv.h:99-153 probe; SURVEY §4 optional Strategy).
   * The Sort+Limit stay and run as TakeOrdered over the pruned scan, so
   * results are exactly the index's nprobe answer.
@@ -197,7 +193,7 @@ object GraftSql {
   * nprobe answer otherwise (spec: SqlApiSpec "composes with a user WHERE";
   * oracle: `sql_index_topk_filtered`).
   *
-  * Covers every partitioned base the engine stores: IVF_FLAT and IVF_PQ
+  * Covers every partitioned base the engine stores: IVF_FLAT, IVF_SQ8 and IVF_PQ
   * prune `partition_id` on the k-means centroids (the PQ base keeps the
   * original vectors beside the codes, so the pruned SQL scan re-ranks
   * exactly — the index's nprobe answer at k_factor=∞); sharded VAMANA
@@ -236,7 +232,7 @@ object IndexProbeRewrite extends Rule[LogicalPlan] {
     // over queries × registered-base — the rank filter bounds each query's
     // result, so restricting each query row to its own top-nprobe centroid
     // partitions is exactly the programmatic IVF nprobe answer
-    // ([[graft.index.IvfFlatIndex.queryBase]] builds the identical
+    // ([[graft.index.IvfIndex.probe]] builds the identical
     // explode-probes equi-join). The cross join becomes an equi-join on
     // partition_id: shuffle nprobe×|batch| instead of |batch|×|corpus|.
     // Behavior note: a query row with a NULL query vector produces zero
@@ -464,7 +460,7 @@ object IndexProbeRewrite extends Rule[LogicalPlan] {
   }
 
   /** The vector the centroid ranking runs on, mirroring the programmatic
-    * path ([[graft.index.IvfFlatIndex.queryBase]]): COSINE indexes store
+    * path ([[graft.index.IvfIndex.probe]]): COSINE indexes store
     * normalized vectors and centroids, so the query normalizes too
     * (reference: ivf_flat_index.py:254-255); L2/SOS/IP rank raw (the same
     * L2 centroid ranking the index uses for every metric). */

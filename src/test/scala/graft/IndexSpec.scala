@@ -22,6 +22,13 @@ class IndexSpec extends AnyFunSuite {
   private lazy val queries10: DataFrame = emb.where(col("external_id") < 10)
     .select(col("external_id").as("qid"), col("vector").as("qvec"))
 
+  /** One 8-partition index per IVF type, for the tests that only read. */
+  private lazy val ivf8: Map[String, VectorIndex] =
+    Seq("IVF_FLAT", "IVF_SQ8", "IVF_PQ").map { indexType =>
+      indexType -> Ingest.ingest(spark, tmp(), emb, indexType, DistanceMetric.L2,
+        timestamp = 1000L, partitions = Some(8))
+    }.toMap
+
   private def exactIds(db: DataFrame, k: Int, metric: DistanceMetric = DistanceMetric.L2)
       : Map[Long, Seq[Long]] =
     Knn.bruteForce(db, queries10, k, metric, idCol = "external_id", vecCol = "vector")
@@ -648,17 +655,25 @@ class IndexSpec extends AnyFunSuite {
   }
 
   test("IVF consolidate with copy-centroids reuses the trained centroids") {
-    val uri = tmp()
-    val idx = Ingest.ingest(spark, uri, emb, "IVF_FLAT", DistanceMetric.L2,
-      timestamp = 1000L, partitions = Some(8)).asInstanceOf[graft.index.IvfFlatIndex]
-    val before = idx.centroids.map(_.toSeq)
-    idx.deleteBatch(emb.where(col("external_id") < 50), ts = 1100L)
-    val after = VectorIndex.open(spark, uri)
-      .consolidateUpdates(newTs = 2000L, reuseCentroids = true)
-      .asInstanceOf[graft.index.IvfFlatIndex]
-    assert(after.centroids.map(_.toSeq).toSeq === before.toSeq)
     val expected = exactIds(emb.where(col("external_id") >= 50), 10)
-    assert(gotIds(after.query(queries10, 10, nprobe = 8)) === expected)
+    for (indexType <- Seq("IVF_FLAT", "IVF_SQ8", "IVF_PQ")) {
+      val uri = tmp()
+      val idx = Ingest.ingest(spark, uri, emb, indexType, DistanceMetric.L2,
+        timestamp = 1000L, partitions = Some(8)).asInstanceOf[graft.index.IvfIndex]
+      val before = idx.centroids.map(_.toSeq)
+      idx.deleteBatch(emb.where(col("external_id") < 50), ts = 1100L)
+      val after = VectorIndex.open(spark, uri)
+        .consolidateUpdates(newTs = 2000L, reuseCentroids = true)
+        .asInstanceOf[graft.index.IvfIndex]
+      assert(after.centroids.map(_.toSeq).toSeq === before.toSeq, indexType)
+      // probe-all; the lossy codecs re-rank every surviving row
+      val got = after match {
+        case lossy: graft.index.IvfRerankIndex =>
+          lossy.queryBase(queries10, 10, nprobe0 = 8, kFactor = 50f)
+        case exact => exact.query(queries10, 10, nprobe = 8)
+      }
+      assert(gotIds(got) === expected, indexType)
+    }
   }
 
   test("clearHistory drops old versions; vacuum compacts the updates log") {
@@ -1114,20 +1129,33 @@ class IndexSpec extends AnyFunSuite {
   }
 
   test("IVF_PQ query gates pairs/candidates/qvecs broadcasts on the size threshold") {
-    val uri = tmp()
-    val idx = Ingest.ingest(spark, uri, emb, "IVF_PQ", DistanceMetric.L2,
-      timestamp = 1000L, partitions = Some(8)).asInstanceOf[graft.index.IvfPqIndex]
     val allQ = emb.select(col("external_id").as("qid"), col("vector").as("qvec"))
-    val expected = idx.queryBase(allQ, 10, nprobe0 = 8, kFactor = 50f)
-      .orderBy("qid", "rank").collect()
-    spark.conf.set(VectorIndex.MaxBroadcastBytesKey, "1")
-    try {
-      val df = idx.queryBase(allQ, 10, nprobe0 = 8, kFactor = 50f)
-      val plan = df.queryExecution.sparkPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"), s"still broadcasting:\n${plan.take(2000)}")
-      assert(plan.contains("ShuffledHashJoin"), s"no shuffle hash join:\n${plan.take(2000)}")
-      assert(df.orderBy("qid", "rank").collect() === expected)
-    } finally spark.conf.unset(VectorIndex.MaxBroadcastBytesKey)
+    // IVF_SQ8 shares the probe and the re-rank joins
+    for (indexType <- Seq("IVF_PQ", "IVF_SQ8")) {
+      val idx = ivf8(indexType).asInstanceOf[graft.index.IvfRerankIndex]
+      val expected = idx.queryBase(allQ, 10, nprobe0 = 8, kFactor = 50f)
+        .orderBy("qid", "rank").collect()
+      spark.conf.set(VectorIndex.MaxBroadcastBytesKey, "1")
+      try {
+        val df = idx.queryBase(allQ, 10, nprobe0 = 8, kFactor = 50f)
+        val plan = df.queryExecution.sparkPlan.toString
+        assert(!plan.contains("BroadcastHashJoin"),
+          s"$indexType still broadcasting:\n${plan.take(2000)}")
+        assert(plan.contains("ShuffledHashJoin"),
+          s"$indexType no shuffle hash join:\n${plan.take(2000)}")
+        assert(df.orderBy("qid", "rank").collect() === expected, indexType)
+      } finally spark.conf.unset(VectorIndex.MaxBroadcastBytesKey)
+    }
+  }
+
+  test("each IVF type's default nprobe is its documented one") {
+    // sqrt(8) = 2 for IVF_FLAT and IVF_SQ8; min(8, 100) = 8 for IVF_PQ
+    for ((indexType, nprobe) <- Seq("IVF_FLAT" -> 2, "IVF_SQ8" -> 2, "IVF_PQ" -> 8)) {
+      val idx = ivf8(indexType)
+      def rows(df: DataFrame) = df.orderBy("qid", "rank").collect().toSeq
+      assert(rows(idx.query(queries10, 10)) ===
+        rows(idx.query(queries10, 10, nprobe = nprobe)), indexType)
+    }
   }
 
   test("k_factor calibration persists a grid knee that becomes the query default") {

@@ -145,6 +145,23 @@ class SessionCacheSpec extends AnyFunSuite {
     assert(!(SessionCache.get(sibling, path, "t")(new Object) eq theirs))
   }
 
+  test("a dropped sibling session's cached relation is collected") {
+    import spark.implicits._
+    val dir = tmp() + "/rel"
+    Seq(1L, 2L).toDF("x").write.parquet(dir)
+    // only a weak reference leaves this method: the sibling session and its
+    // cached relation are unreachable from the test afterwards
+    def cacheInDroppedSibling(): java.lang.ref.WeakReference[AnyRef] =
+      new java.lang.ref.WeakReference(SessionCache.parquet(spark.newSession(), dir))
+    val ref = cacheInDroppedSibling()
+    val cleared = (1 to 50).exists { _ =>
+      System.gc()
+      Thread.sleep(100)
+      ref.get == null
+    }
+    assert(cleared, "the cache kept a dropped session's relation reachable")
+  }
+
   test("invalidateUnder(<root>/base) keeps <root>/base-other") {
     val root = tmp()
     def entry(p: String): AnyRef = SessionCache.get(spark, p, "t")(new Object)

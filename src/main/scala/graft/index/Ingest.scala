@@ -6,7 +6,7 @@ import org.apache.spark.ml.linalg.{Vector => MlVector}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{vector_normalize, NearestCentroid, PqEncode}
+import graft.functions.{NearestCentroid, PqEncode}
 import org.apache.spark.sql.graftshim.{toColumn, toExpression}
 import graft.operators.DistanceMetric
 
@@ -229,15 +229,10 @@ object Ingest {
     val base0 = source.select(
       col("external_id").cast("long").as("external_id"),
       col("vector").cast("array<float>").as("vector"))
-    // COSINE rides on normalized vectors + L2 kernels for IVF
-    // (reference: ivf_flat_index.py:254-255, ingestion.py:2616-2663).
-    // (BINARY stores raw like FLAT: dist_cosine runs directly at re-rank,
-    // and coordinate SIGNS are normalization-invariant anyway)
-    val normalize = metric == DistanceMetric.Cosine &&
-      indexType != "FLAT" && indexType != "BINARY" && !normalizeDone
-    val base1 = if (normalize) {
-      base0.select(col("external_id"), vector_normalize(col("vector")).as("vector"))
-    } else base0
+    // the stored float form (BINARY's coordinate SIGNS are
+    // normalization-invariant anyway)
+    val base1 = if (normalizeDone) base0 else StoredVectors.normalize(base0, indexType, metric)
+    val rawStore = StoredVectors.rawStore(indexType)
 
     // Ingestion makes several passes over the source (count, dims, training
     // sample, assignment + write). A plain scan re-reads cheaply, but a
@@ -253,8 +248,7 @@ object Ingest {
     // the IndexMeta commit below, so a failed write leaves no readable
     // version (same recovery story as the old staged dir). Byte dtypes
     // still stage separately (their stored base is packed, not the input).
-    val stageDirectToBase = stageInputs && dtype == "float32" &&
-      (indexType == "FLAT" || indexType == "BINARY")
+    val stageDirectToBase = stageInputs && dtype == "float32" && rawStore
 
     // dims + count probe: rather than a standalone aggregate job, the probe
     // rides a write wherever one happens anyway, as an observed aggregate
@@ -300,11 +294,10 @@ object Ingest {
       spark.read.parquet(s"$uri/input_vectors/v=$timestamp")
     } else base1
 
-    val flatLike = indexType == "FLAT" || indexType == "BINARY"
     // -1 sentinels = deferred to the observed base write inside the match
     val (dims, count): (Int, Long) =
       if (stageInputs) obsDimsCount()
-      else if (flatLike) (-1, -1L)
+      else if (rawStore) (-1, -1L)
       else {
         val probe = base.agg(
           first(size(col("vector")), ignoreNulls = true).as("d"),
@@ -331,24 +324,12 @@ object Ingest {
 
     require(dtype == "float32" || dtype == "uint8" || dtype == "int8",
       s"unsupported dtype $dtype (float32 / uint8 / int8)")
-    val byteDtype = dtype != "float32"
+    val byteDtype = StoredVectors.byteDtype(dtype)
     // COSINE on non-FLAT indexes stores NORMALIZED vectors (unit floats are
     // not byte-representable); FLAT cosine works asymmetrically via
     // U8CosineDistance with raw bytes.
     require(!byteDtype || metric != DistanceMetric.Cosine || indexType == "FLAT",
       s"dtype $dtype + COSINE requires FLAT (normalize-at-ingest is float-only)")
-
-    /** Byte-packed storage: one byte per dim, 4x denser on disk and in
-      * shuffle (reference stores u8/i8 natively for every index type,
-      * flat_index.py:195-197, ivf_flat_index.py:555-573). Training,
-      * partition assignment, and PQ encoding all run on the float view;
-      * only the stored `vector` column is packed. */
-    def packVector(df: DataFrame): DataFrame =
-      if (byteDtype)
-        df.withColumn("vector",
-          toColumn(graft.functions.PackBytes(toExpression(col("vector")),
-            signed = dtype == "int8")))
-      else df
 
     var mSubspaces = 0
     var vamanaLBuild = 0
@@ -359,10 +340,10 @@ object Ingest {
     var recordedParts = numParts
     indexType match {
       case "FLAT" =>
-        // withProbe BEFORE packVector: dims must measure the float view,
+        // withProbe BEFORE packing: dims must measure the float view,
         // not the packed byte payload
         if (!stageDirectToBase)
-          packVector(if (stageInputs) base else withProbe(base))
+          StoredVectors.pack(if (stageInputs) base else withProbe(base), dtype)
             .write.mode("overwrite").parquet(s"$uri/base/v=$timestamp")
       case "BINARY" =>
         // 1-bit sign-sketch index: base stored like FLAT (raw floats, the
@@ -500,7 +481,7 @@ object Ingest {
             toColumn(NearestCentroid(toExpression(col("vector")), centroids)))) {
           case (df, (name, code)) => df.withColumn(name, code)
         }
-        clusterForWrite(packVector(assigned), "partition_id", numParts)
+        clusterForWrite(StoredVectors.pack(assigned, dtype), "partition_id", numParts)
           .write.mode("overwrite")
           .partitionBy("partition_id")
           .parquet(s"$uri/base/v=$timestamp")
@@ -552,7 +533,7 @@ object Ingest {
         // search-only portal copies as imported=true, and logical-base
         // readers (SQL view registration, consolidation) filter on the flag
         // instead of paying a replica-dedup pass over the portal rows too.
-        clusterForWrite(packVector(sharded).withColumn("imported", lit(false)),
+        clusterForWrite(StoredVectors.pack(sharded, dtype).withColumn("imported", lit(false)),
             "shard_id", numShards)
           .write.mode("overwrite").partitionBy("shard_id")
           .parquet(s"$uri/base/v=$timestamp")
@@ -585,17 +566,12 @@ object Ingest {
             .select("external_id", "neighbors", "is_medoid", "shard_id")
           val written = spark.read.parquet(s"$uri/base/v=$timestamp")
             .select("external_id", "vector", "shard_id")
-          val writtenFloat =
-            if (dtype == "uint8" || dtype == "int8")
-              written.withColumn("vector",
-                toColumn(graft.functions.UnpackBytes(toExpression(col("vector")),
-                  signed = dtype == "int8")))
-            else written
+          val writtenFloat = StoredVectors.unpack(written, dtype)
           val (gx, portalBase) =
             VamanaIndex.exchangeBoundaryEdges(spark, writtenFloat, gWritten, rd)
           gx.write.mode("overwrite").partitionBy("shard_id")
             .parquet(s"$uri/graph/v=$timestamp")
-          packVector(portalBase).withColumn("imported", lit(true))
+          StoredVectors.pack(portalBase, dtype).withColumn("imported", lit(true))
             .write.mode("append").partitionBy("shard_id")
             .parquet(s"$uri/base/v=$timestamp")
           Storage.deleteRecursively(gTmp)

@@ -31,8 +31,9 @@ import graft.operators.{ByteKnn, DistanceMetric, Knn}
   * per-query columns the score reads ([[queryColumns]]) and the size of a
   * pair row ([[pairBytes]]).
   */
-abstract class IvfIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
-    extends VectorIndex(spark, uri, meta, ts) {
+abstract class IvfIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
+    range: Option[VectorIndex.ReadWindow] = None)
+    extends VectorIndex(spark, uri, meta, ts, range) {
   import IvfIndex.Probe
 
   lazy val centroids: Array[Array[Float]] =
@@ -56,12 +57,13 @@ abstract class IvfIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: L
   /** Estimated bytes of one (query, partition) pair row. */
   protected def pairBytes: Long = 24L + 4L * meta.dimensions
 
-  /** nprobe when the caller passes 0 (reference: ivf_flat_index.py:213-215). */
-  protected def defaultNprobe(parts: Int): Int =
+  /** nprobe when the caller passes 0 (reference: ivf_flat_index.py:213-215);
+    * the SQL view and the serving snapshot take the same default. */
+  private[graft] def defaultNprobe(parts: Int): Int =
     math.max(1, math.sqrt(parts.toDouble).toInt)
 
   override def baseVectors(): DataFrame =
-    if (historyIdx < 0) new FlatIndex(spark, uri, meta, ts).baseVectors()
+    if (historyIdx < 0) StoredVectors.empty(spark)
     else {
       val cols = ("external_id" +: "vector" +: codeColumns) :+ "partition_id"
       readVersioned(s"$uri/base/v=$baseTimestamp").select(cols.head, cols.tail: _*)
@@ -76,7 +78,7 @@ abstract class IvfIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: L
   /** Exact distance of a stored vector to a float query; byte dtypes use
     * the asymmetric float-vs-packed kernels. */
   protected def exactScore(vector: Column, qvec: Column): Column =
-    if (meta.dtype == "uint8" || meta.dtype == "int8")
+    if (StoredVectors.byteDtype(meta.dtype))
       ByteKnn.score(scoreMetric, signed = meta.dtype == "int8")(vector, qvec)
     else DistanceMetric.score(scoreMetric)(vector, qvec)
 
@@ -156,8 +158,9 @@ object IvfIndex {
 /** The IVF codecs whose scan is approximate (IVF_SQ8, IVF_PQ): the scan
   * keeps k x kFactor candidates and an exact re-rank from the stored float
   * vectors picks the top k (reference: ivf_pq_index.h:1404-1530). */
-abstract class IvfRerankIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
-    extends IvfIndex(spark, uri, meta, ts) {
+abstract class IvfRerankIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
+    range: Option[VectorIndex.ReadWindow] = None)
+    extends IvfIndex(spark, uri, meta, ts, range) {
   import IvfIndex.Probe
 
   /** The candidate inflation of the default query path: a calibrated knee
@@ -210,8 +213,9 @@ abstract class IvfRerankIndex(spark: SparkSession, uri: String, meta: IndexMeta,
 
 /** IVF_FLAT (reference: apis/python/src/tiledb/vector_search/
   * ivf_flat_index.py:189-310): the scan is the exact float distance. */
-class IvfFlatIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
-    extends IvfIndex(spark, uri, meta, ts) {
+class IvfFlatIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
+    range: Option[VectorIndex.ReadWindow] = None)
+    extends IvfIndex(spark, uri, meta, ts, range) {
 
   protected def codeColumns: Seq[String] = Nil
 
@@ -229,8 +233,9 @@ class IvfFlatIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
   * quantizer (per-dim mins/scales) lives in `sq_params/v=<ts>`, versioned
   * like the centroids so time travel reopens the matching one;
   * consolidation retrains it on the merged base. */
-class IvfSq8Index(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
-    extends IvfRerankIndex(spark, uri, meta, ts) {
+class IvfSq8Index(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
+    range: Option[VectorIndex.ReadWindow] = None)
+    extends IvfRerankIndex(spark, uri, meta, ts, range) {
 
   /** (mins, scales), each dims long. */
   lazy val sqParams: (Array[Float], Array[Float]) =
@@ -273,8 +278,9 @@ object IvfSq8Index {
   * query rows (reference builds them per query, ivf_pq_index.h:1181-1254),
   * the scan is m table lookups per vector. SUM_OF_SQUARES / L2 only, like
   * the reference (ivf_pq_index.py:212-218). */
-class IvfPqIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
-    extends IvfRerankIndex(spark, uri, meta, ts) {
+class IvfPqIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
+    range: Option[VectorIndex.ReadWindow] = None)
+    extends IvfRerankIndex(spark, uri, meta, ts, range) {
 
   /** codebooks(subspace)(code) = sub-centroid */
   lazy val codebooks: Array[Array[Array[Float]]] =
@@ -291,7 +297,7 @@ class IvfPqIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
 
   protected def codeColumns: Seq[String] = Seq("codes")
 
-  override protected def defaultNprobe(parts: Int): Int =
+  override private[graft] def defaultNprobe(parts: Int): Int =
     math.min(parts, IvfPqIndex.DefaultNprobe)
 
   override protected def queryColumns(qvec: Column): Seq[(String, Column)] = {

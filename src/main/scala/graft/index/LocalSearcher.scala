@@ -34,13 +34,14 @@ final class LocalSearcher private[index] (
     blockVecs: Array[Array[Float]], // row-major flattened, aligned with blockIds
     centroids: Array[Array[Float]], // empty -> no probe pruning (scan all)
     alwaysScan: Array[Int], // block indexes scanned for every query (extras)
-    normalizedStore: Boolean) { // cosine non-FLAT: vectors stored normalized
+    normalizedStore: Boolean, // cosine non-FLAT: vectors stored normalized
+    defaultNprobe: Int) { // nprobe <= 0 probes this many (the index's default)
 
   def numVectors: Long = blockIds.map(_.length.toLong).sum
 
   /** Top-k for one query vector; ascending (distance, id), no Spark jobs.
-    * `nprobe <= 0` = the index default (sqrt of partitions); ignored when the
-    * snapshot has no centroid blocking. */
+    * `nprobe <= 0` = the index's own default; ignored when the snapshot has
+    * no centroid blocking. */
   def query(qvec: Array[Float], k: Int, nprobe: Int = 0): Array[(Long, Float)] =
     queryImpl(qvec, k, nprobe, allow = null)
 
@@ -109,10 +110,7 @@ final class LocalSearcher private[index] (
   private def scanBlocks(q: Array[Float], nprobe0: Int): Array[Int] =
     if (centroids.isEmpty) blockIds.indices.toArray
     else {
-      val parts = centroids.length
-      val nprobe =
-        if (nprobe0 <= 0) math.max(1, math.sqrt(parts.toDouble).toInt)
-        else math.min(nprobe0, parts)
+      val nprobe = if (nprobe0 <= 0) defaultNprobe else math.min(nprobe0, centroids.length)
       // argmin top-nprobe over the same centroid set the distributed probe
       // uses — FLOAT accumulation to mirror NearestCentroids.topN exactly,
       // so near-tied centroids order identically and the probed partition

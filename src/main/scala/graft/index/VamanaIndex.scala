@@ -373,11 +373,12 @@ object VamanaKernels {
   * merge — each task holds one shard's graph only; queries broadcast).
   */
 class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
-    val nprobeShards: Int = 0, val pqKFactor: Float = 0f)
-    extends VectorIndex(spark, uri, meta, ts) {
+    val nprobeShards: Int = 0, val pqKFactor: Float = 0f,
+    range: Option[VectorIndex.ReadWindow] = None)
+    extends VectorIndex(spark, uri, meta, ts, range) {
 
   override def baseVectors(): DataFrame = {
-    if (historyIdx < 0) return new FlatIndex(spark, uri, meta, ts).baseVectors()
+    if (historyIdx < 0) return StoredVectors.empty(spark)
     val b = residentRows(readVersioned(s"$uri/base/v=$baseTimestamp"))
       .select("external_id", "vector")
     // boundary-replicated builds store each vector in several shards; the
@@ -433,14 +434,10 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
   def queryLSearch(queries: DataFrame, k: Int, lSearch: Int, nprobeShards: Int): DataFrame =
     withNprobeShards(nprobeShards).query(queries, k, nprobe = lSearch)
 
-  /** Same index, queries routed to the top-`s` shards per query. */
-  def withNprobeShards(s: Int): VamanaIndex = {
-    val idx = new VamanaIndex(spark, uri, meta, readTimestamp, s, pqKFactor)
-    // carry the read window: a range-opened handle must stay windowed
-    idx.updateWindow = updateWindow
-    idx.queryBaseArray = queryBaseArray
-    idx
-  }
+  /** Same index and read window, queries routed to the top-`s` shards per
+    * query. */
+  def withNprobeShards(s: Int): VamanaIndex =
+    new VamanaIndex(spark, uri, meta, readTimestamp, s, pqKFactor, Some(window))
 
   /** Same index, base searches traversing PQ CODES instead of float
     * vectors (DiskANN's memory layout — Subramanya et al., NeurIPS'19 §3:
@@ -462,10 +459,7 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
       else VamanaIndex.DefaultPqKFactor
     require(kf >= 1f,
       s"graft: withPqTraversal kFactor must be >= 1 (got $kf)")
-    val idx = new VamanaIndex(spark, uri, meta, readTimestamp, nprobeShards, kf)
-    idx.updateWindow = updateWindow
-    idx.queryBaseArray = queryBaseArray
-    idx
+    new VamanaIndex(spark, uri, meta, readTimestamp, nprobeShards, kf, Some(window))
   }
 
   /** Measure the PQ-traversal k_factor knee for THIS corpus at THIS
@@ -587,12 +581,11 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
       reuseCentroids: Boolean = false): VectorIndex = {
     requirePointInTime("consolidateUpdates")
     val currentShards = if (historyIdx >= 0) meta.partitionHistory(historyIdx) else 0
-    // upd.nonEmpty (the Option) IS a rows check: updatesInWindow() returns
-    // None for a window with zero rows (its `.filter(!_.isEmpty)`), so an
-    // updates log holding only already-consolidated entries cannot reach the
-    // copy path and duplicate every shard into a new version —
-    // latestUpdatePerId of a non-empty window is non-empty by construction.
-    val upd = updatesInWindow()
+    // visibleUpdates is None when the window holds no log row, so a log
+    // holding only already-consolidated entries takes the full re-ingest
+    // (which then folds nothing) instead of copying every shard into a new
+    // version; a non-empty window always masks at least one id.
+    val upd = visibleUpdates(stored = true)
     val incrementalOk = historyIdx >= 0 && currentShards > 1 && meta.lBuild > 0 &&
       upd.nonEmpty && partitions.forall(_ == currentShards) &&
       shardCentroids.length == currentShards
@@ -602,9 +595,7 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
 
     import spark.implicits._
     import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-    val byteDtype = meta.dtype == "uint8" || meta.dtype == "int8"
-    val latest = latestUpdatePerId(upd.get)
-    val touchedIds = latest.select("external_id").cache()
+    val touchedIds = upd.get.masked.cache()
     // carry the portal flag through when the active version has it — the
     // affected-shard rewrite must keep every file's schema identical to the
     // byte-copied untouched shards' (a mixed-presence column is resolved
@@ -617,15 +608,9 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
           coalesce(col("imported"), lit(false)).as("imported"))
       else oldBaseRaw.select("shard_id", "external_id", "vector")
 
-    // additions: raw update vectors, normalized for COSINE (the stored base
-    // is normalized), assigned to their shardReplicas nearest shards
-    val addsRaw = latest.where(col("vector").isNotNull)
-      .select(col("external_id"), col("vector").cast("array<float>").as("vector"))
-    val addsFloat =
-      if (metric == DistanceMetric.Cosine)
-        addsRaw.select(col("external_id"),
-          graft.functions.vector_normalize(col("vector")).as("vector"))
-      else addsRaw
+    // additions in the stored float form, assigned to their shardReplicas
+    // nearest shards
+    val addsFloat = upd.get.additions
     val reps = math.max(1, meta.shardReplicas)
     val addsAssigned = (if (reps > 1)
       addsFloat.withColumn("shard_id",
@@ -682,12 +667,7 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
     if (affected.nonEmpty) {
       val keptOld = oldBase.where(col("shard_id").isin(affected: _*))
         .join(touchedIds, Seq("external_id"), "left_anti")
-      val addsStored =
-        if (byteDtype)
-          addsAssigned.withColumn("vector",
-            toColumn(graft.functions.PackBytes(toExpression(col("vector")),
-              signed = meta.dtype == "int8")))
-        else addsAssigned
+      val addsStored = StoredVectors.pack(addsAssigned, meta.dtype)
       val baseCols =
         if (hasImportedCol) Seq("shard_id", "external_id", "vector", "imported")
         else Seq("shard_id", "external_id", "vector")
@@ -699,12 +679,7 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
         .parquet(s"$uri/base/v=$newTs")
 
       // 3. rebuild graphs for affected shards only (same kernel + params)
-      val floatView =
-        if (byteDtype)
-          newAffected.withColumn("vector",
-            toColumn(graft.functions.UnpackBytes(toExpression(col("vector")),
-              signed = meta.dtype == "int8")))
-        else newAffected
+      val floatView = StoredVectors.unpack(newAffected, meta.dtype)
       val lb = meta.lBuild
       val rd = meta.rMaxDegree
       // one task per shard + id-sorted insertion order (see
@@ -812,14 +787,8 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
     // per-shard search: one task per shard holds only that shard's graph.
     // Byte dtypes widen the packed base back to float for the in-task
     // kernels (distances on widened values = the asymmetric byte metric).
-    val baseRaw = pruneShards(readVersioned(s"$uri/base/v=$baseTimestamp"))
-    val baseFloat =
-      if (meta.dtype == "uint8" || meta.dtype == "int8") {
-        import org.apache.spark.sql.graftshim.{toColumn, toExpression}
-        baseRaw.withColumn("vector",
-          toColumn(graft.functions.UnpackBytes(toExpression(col("vector")),
-            signed = meta.dtype == "int8")))
-      } else baseRaw
+    val baseFloat = StoredVectors.unpack(
+      pruneShards(readVersioned(s"$uri/base/v=$baseTimestamp")), meta.dtype)
     val graph = baseFloat
       .join(pruneShards(readVersioned(s"$uri/graph/v=$baseTimestamp")),
         Seq("shard_id", "external_id"))

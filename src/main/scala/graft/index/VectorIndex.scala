@@ -1,12 +1,9 @@
 package graft.index
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.functions.{dist_sos, vector_normalize}
 import graft.operators.{DistanceMetric, Knn}
 
 /** A queryable vector index version, the Spark-side analogue of the
@@ -27,48 +24,30 @@ abstract class VectorIndex(
     val spark: SparkSession,
     val uri: String,
     val meta: IndexMeta,
-    val readTimestamp: Long) {
+    val readTimestamp: Long,
+    range: Option[VectorIndex.ReadWindow] = None) {
 
   protected val historyIdx: Int = meta.historyIndex(readTimestamp)
   protected val baseTimestamp: Long =
     if (historyIdx >= 0) meta.ingestionTimestamps(historyIdx) else -1L
 
-  /** Inclusive updates-log window for this handle. A point-in-time open
-    * reads (base_ts, read_ts]; a RANGE open ([[VectorIndex.openRange]],
-    * reference index.py:115-177 tuple form) re-pins it to the requested
-    * window. Set only by the companion's open methods, before the handle
-    * escapes the constructor thread. */
-  @volatile private[index] var updateWindow: (Long, Long) =
-    (baseTimestamp + 1, readTimestamp)
+  /** What this handle reads. A point-in-time open reads the base version
+    * plus the log in (base_ts, read_ts]; a range open
+    * ([[VectorIndex.openRange]]) passes its own window. Fixed at
+    * construction. */
+  protected val window: VectorIndex.ReadWindow = range.getOrElse(pointInTime)
 
-  /** False when a range open's start bound excludes every base version:
-    * only updates-log entries in the window contribute (reference
-    * index.py:123-128 sets query_base_array = False). */
-  @volatile private[index] var queryBaseArray: Boolean = true
-
-  private def isPointInTime: Boolean =
-    queryBaseArray && updateWindow == (baseTimestamp + 1, readTimestamp)
+  private def pointInTime = VectorIndex.ReadWindow(baseTimestamp + 1, readTimestamp, withBase = true)
 
   /** Maintenance entry points fold "everything visible now" back into
     * storage — on a windowed view that would silently drop out-of-window
     * history, so they refuse range handles. */
   protected def requirePointInTime(op: String): Unit =
-    require(isPointInTime,
+    require(window == pointInTime,
       s"graft: $op on a range-opened handle would fold only the windowed " +
         "updates; re-open point-in-time (VectorIndex.open) first")
 
   def metric: DistanceMetric = meta.metric
-
-  /** True when the base version stores RAW (un-normalized) vectors. FLAT
-    * keeps raw floats so exact re-scoring matches brute force; BINARY keeps
-    * raw floats alongside the sign sketch because the exact re-rank stage
-    * (BinaryKnn) recomputes true distances from them (Ingest.scala
-    * normalize-at-ingest excludes both). Everything cosine that is NOT a
-    * raw store was normalized at ingest, so merge/serve paths must mirror
-    * that split — a BINARY+Cosine snapshot scored as if normalized would
-    * silently produce wrong distances. */
-  protected def rawVectorStore: Boolean =
-    meta.indexType == "FLAT" || meta.indexType == "BINARY"
 
   /** The active base version's vectors: (external_id, vector[, partition_id]).
     * Empty (with correct schema) when the read predates the first ingestion. */
@@ -162,33 +141,25 @@ abstract class VectorIndex(
           s"reference index.py:309-312), got ${other.catalogString}")
     }
     val q = queries.select(col("qid").cast("long").as("qid"), col("qvec"))
-    val upd = updatesInWindow()
-    if (!queryBaseArray) {
-      // range open with start past every ingestion: only the writes in the
-      // window count (reference index.py:123-128) — a consolidated base
-      // cannot attribute its rows to a write time, so it is excluded
-      // entirely and the windowed additions are brute-forced.
-      val additions = upd.map(latestUpdatePerId(_)
-          .where(col("vector").isNotNull)
-          .select(col("external_id").as("id"), col("vector")))
-        .getOrElse(emptyAdditions())
-      return Knn.bruteForce(restrictTo(additions, allow, idCol = "id"), q, k,
-        metric, idCol = "id", vecCol = "vector", qidCol = "qid", qvecCol = "qvec")
-    }
+    val upd = visibleUpdates()
+    lazy val additions = upd.map(_.additions.select(col("external_id").as("id"), col("vector")))
+      .getOrElse(StoredVectors.empty(spark, idCol = "id"))
+    def addHits = Knn.bruteForce(restrictTo(additions, allow, idCol = "id"),
+      q, k, metric, idCol = "id", vecCol = "vector", qidCol = "qid", qvecCol = "qvec")
+    // range open with start past every ingestion: only the writes in the
+    // window count (reference index.py:123-128) — a consolidated base
+    // cannot attribute its rows to a write time, so it is excluded
+    // entirely and the windowed additions are brute-forced.
+    if (!window.withBase) return addHits
     if (upd.isEmpty) return queryBase(q, k, nprobe, allow)
 
-    val latest = latestUpdatePerId(upd.get)
-    val updatedIds = latest.select(col("external_id"))
+    val masked = upd.get.masked
     // retrieval_k = 2k when updates are present (reference: index.py:352-364).
     // No broadcast hint: the updates-id set is usually tiny (stats/AQE pick
     // a broadcast anti join) but can grow arbitrarily between
     // consolidations, where a forced broadcast would break at scale.
     val baseHits = queryBase(q, 2 * k, nprobe, allow)
-      .join(updatedIds, col("id") === updatedIds("external_id"), "left_anti")
-    val additions = latest.where(col("vector").isNotNull)
-      .select(col("external_id").as("id"), col("vector"))
-    val addHits = Knn.bruteForce(restrictTo(additions, allow, idCol = "id"),
-      q, k, metric, idCol = "id", vecCol = "vector", qidCol = "qid", qvecCol = "qvec")
+      .join(masked, col("id") === masked("external_id"), "left_anti")
     val merged = baseHits.select("qid", "id", "distance")
       .unionByName(addHits.select("qid", "id", "distance"))
       .select(col("qid").as("__qid"), col("id").as("__id"),
@@ -209,129 +180,107 @@ abstract class VectorIndex(
   protected def readVersioned(path: String): DataFrame =
     graft.SessionCache.parquet(spark, path)
 
-  /** Empty (id: Long, vector: array<float>) frame — the additions side of a
-    * windowed read whose updates log has no in-window rows. */
-  private def emptyAdditions(): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("id", LongType),
-        StructField("vector", ArrayType(FloatType)))))
-  }
-
   // ----- updates log (reference: index.py:418-501, 764-814) -----
 
-  protected def updatesPath: String = s"$uri/updates"
+  private def updatesPath: String = s"$uri/updates"
 
   /** The updates log, None when its directory is missing or empty. Every
     * log mutator invalidates [[updatesPath]], re-arming this and the
     * window probe below. */
-  protected def updatesLog(): Option[DataFrame] =
+  private def updatesLog(): Option[DataFrame] =
     graft.SessionCache.get(spark, updatesPath, "updatesLog") {
       if (Storage.nonEmptyDir(updatesPath)) Some(spark.read.parquet(updatesPath))
       else None
     }
 
-  /** Updates visible at this read: ts within [[updateWindow]] (both bounds
-    * inclusive; the point-in-time default (base_ts+1, read_ts) is exactly
-    * the historical "ts in (base_ts, read_ts]"). The in-window emptiness
-    * probe is one isEmpty job, so it is memoized per window. */
-  protected def updatesInWindow(): Option[DataFrame] = updatesLog().flatMap { log =>
-    val (lo, hi) = updateWindow
+  /** Log rows with ts in [[window]] (both bounds inclusive), None when
+    * there are none. The emptiness probe is one isEmpty job, so it is
+    * memoized per window. */
+  private def updatesInWindow(): Option[DataFrame] = updatesLog().flatMap { log =>
+    val VectorIndex.ReadWindow(lo, hi, _) = window
     val w = log.where(col("ts") >= lo && col("ts") <= hi)
     if (graft.SessionCache.get(spark, updatesPath, ("windowEmpty", lo, hi))(w.isEmpty)) None
     else Some(w)
   }
 
-  /** Last-write-wins per external id (the reference's sparse-array
-    * overwrite semantics, index.py:876-897). */
-  protected def latestUpdatePerId(upd: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("external_id")).orderBy(col("ts").desc)
-    upd.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
-  }
+  /** The in-window log resolved last-write-wins per external id (the
+    * reference's sparse-array overwrite, index.py:876-897), None when the
+    * window holds no row. `stored` brings the additions to the base's
+    * stored float form ([[StoredVectors]]), as a merge into the stored base
+    * needs; the query path scores them raw. */
+  protected def visibleUpdates(stored: Boolean = false): Option[VectorIndex.VisibleUpdates] =
+    updatesInWindow().map { upd =>
+      val w = Window.partitionBy(col("external_id")).orderBy(col("ts").desc)
+      val latest = upd.withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1).drop("__rn")
+      val additions = latest.where(col("vector").isNotNull).select("external_id", "vector")
+      VectorIndex.VisibleUpdates(latest.select("external_id"),
+        if (stored) StoredVectors.normalize(additions, meta.indexType, metric) else additions)
+    }
 
   /** Upsert a batch of (external_id, vector) at `ts`
-    * (reference: index.py:418-462 `update_batch`).
-    *
-    * The metadata flip re-reads index.json rather than rewriting this
-    * handle's in-memory copy: a consolidation through ANOTHER handle may
-    * have appended versions since this one was opened, and a stale-meta
-    * write would silently orphan them. */
-  def updateBatch(vectors: DataFrame, ts: Long): Unit = {
-    vectors.select(
-        col("external_id").cast("long"),
-        col("vector").cast("array<float>"),
-        lit(ts).as("ts"))
-      .write.mode("append").parquet(updatesPath)
-    IndexMeta.write(uri, IndexMeta.read(uri).copy(hasUpdates = true))
-    // re-arm the memoized log relation + window-emptiness probes
-    graft.SessionCache.invalidateUnder(updatesPath)
-  }
+    * (reference: index.py:418-462 `update_batch`). */
+  def updateBatch(vectors: DataFrame, ts: Long): Unit =
+    appendLog(vectors.select(col("external_id"), col("vector"), lit(ts).as("ts")))
 
   /** Tombstone a batch of ids at `ts`: vector = null
-    * (reference: index.py:464-501 — empty vector ⇒ delete). Metadata
-    * handling as in [[updateBatch]]. */
-  def deleteBatch(ids: DataFrame, ts: Long): Unit = {
-    ids.select(
-        col("external_id").cast("long"),
-        lit(null).cast("array<float>").as("vector"),
-        lit(ts).as("ts"))
-      .write.mode("append").parquet(updatesPath)
-    IndexMeta.write(uri, IndexMeta.read(uri).copy(hasUpdates = true))
-    graft.SessionCache.invalidateUnder(updatesPath)
-  }
+    * (reference: index.py:464-501 — empty vector ⇒ delete). */
+  def deleteBatch(ids: DataFrame, ts: Long): Unit =
+    appendLog(tombstones(ids, ts))
 
   /** Upserts + tombstones in ONE log append: `upserts` rows
     * (external_id, vector) and `deleteIds` rows (external_id) land as a
     * single write job at `ts` — row-identical to an [[updateBatch]]
     * followed by a [[deleteBatch]] (the log is resolved by
     * last-write-per-id, never by file or row order), at half the job and
-    * metadata-flip count. The r13 VERDICT's maintenance-op batching:
-    * callers holding several logical batches for one maintenance window
-    * buffer them into one append instead of paying a Spark job per call. */
-  def updateDeleteBatch(upserts: DataFrame, deleteIds: DataFrame, ts: Long): Unit = {
-    val up = upserts.select(
-      col("external_id").cast("long"),
-      col("vector").cast("array<float>"),
-      lit(ts).as("ts"))
-    val del = deleteIds.select(
-      col("external_id").cast("long"),
-      lit(null).cast("array<float>").as("vector"),
-      lit(ts).as("ts"))
-    up.unionByName(del).write.mode("append").parquet(updatesPath)
-    IndexMeta.write(uri, IndexMeta.read(uri).copy(hasUpdates = true))
-    graft.SessionCache.invalidateUnder(updatesPath)
-  }
+    * metadata-flip count. Callers holding several logical batches for one
+    * maintenance window buffer them into one append instead of paying a
+    * Spark job per call. */
+  def updateDeleteBatch(upserts: DataFrame, deleteIds: DataFrame, ts: Long): Unit =
+    appendLog(upserts.select(col("external_id"), col("vector"), lit(ts).as("ts"))
+      .unionByName(tombstones(deleteIds, ts)))
 
   /** Append MANY logical batches as one write job that still lays each
     * batch down as its own fragment file (the shape a sequence of
     * individual appends produces, minus the per-append job + commit +
     * metadata flip): `rows` carry (external_id, vector nullable, ts,
-    * `__frag` in [0, fragments)), and an explicit fragment → task
-    * partitioner gives every fragment its own output file. Row content is
-    * identical to `fragments` separate update/delete appends — the log is
-    * resolved per-id by ts, so only the file geometry is at stake, and
-    * callers that NEED the multi-fragment geometry (auto-compaction
-    * thresholds) keep it. */
-  private[graft] def appendLogFragments(rows: DataFrame, fragments: Int): Unit = {
+    * `__frag` in [0, fragments)). Row content is identical to `fragments`
+    * separate update/delete appends — the log is resolved per-id by ts, so
+    * only the file geometry is at stake, and callers that NEED the
+    * multi-fragment geometry (auto-compaction thresholds) keep it. */
+  private[graft] def appendLogFragments(rows: DataFrame, fragments: Int): Unit =
+    appendLog(rows, fragments = math.max(1, fragments))
+
+  private def tombstones(ids: DataFrame, ts: Long): DataFrame =
+    ids.select(col("external_id"), lit(null).cast("array<float>").as("vector"),
+      lit(ts).as("ts"))
+
+  /** The one updates-log append: `rows` (external_id, vector — null for a
+    * tombstone —, ts) cast to the log schema and written as one job; with
+    * `fragments` > 0 an explicit `__frag` → task partitioner gives every
+    * fragment its own output file. Then `hasUpdates` is set and the
+    * memoized log reads are re-armed. The metadata flip re-reads
+    * index.json rather than rewriting this handle's in-memory copy: a
+    * consolidation through ANOTHER handle may have appended versions since
+    * this one was opened, and a stale-meta write would silently orphan
+    * them. */
+  private def appendLog(rows: DataFrame, fragments: Int = 0): Unit = {
     import spark.implicits._
-    val parts = math.max(1, fragments)
-    val shaped = rows.select(
-        col("external_id").cast("long"),
-        col("vector").cast("array<float>"),
-        col("ts").cast("long"),
-        col("__frag").cast("int"))
-      .as[(Long, Array[Float], Long, Int)].rdd
-      .map { case (id, v, t, f) => (f, (id, v, t)) }
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = parts
-        override def getPartition(key: Any): Int =
-          ((key.asInstanceOf[Int] % parts) + parts) % parts
-      })
-      .map(_._2)
-    spark.createDataset(shaped).toDF("external_id", "vector", "ts")
-      .write.mode("append").parquet(updatesPath)
+    val logCols = Seq(col("external_id").cast("long"), col("vector").cast("array<float>"),
+      col("ts").cast("long"))
+    val out =
+      if (fragments <= 0) rows.select(logCols: _*)
+      else spark.createDataset(rows.select(logCols :+ col("__frag").cast("int"): _*)
+          .as[(Long, Array[Float], Long, Int)].rdd
+          .map { case (id, v, t, f) => (f, (id, v, t)) }
+          .partitionBy(new org.apache.spark.Partitioner {
+            override def numPartitions: Int = fragments
+            override def getPartition(key: Any): Int =
+              ((key.asInstanceOf[Int] % fragments) + fragments) % fragments
+          })
+          .map(_._2))
+        .toDF("external_id", "vector", "ts")
+    out.write.mode("append").parquet(updatesPath)
     IndexMeta.write(uri, IndexMeta.read(uri).copy(hasUpdates = true))
     graft.SessionCache.invalidateUnder(updatesPath)
   }
@@ -343,39 +292,14 @@ abstract class VectorIndex(
       newTs: Long,
       partitions: Option[Int] = None,
       reuseCentroids: Boolean = false): VectorIndex = {
-    import org.apache.spark.sql.graftshim.{toColumn, toExpression}
     requirePointInTime("consolidateUpdates")
-    val upd = updatesInWindow()
-    // Byte-dtype bases store BinaryType packed vectors; widen back to
-    // array<float> so the merge + re-ingest run through the float path
-    // (Ingest re-packs under the same dtype).
-    val base = {
-      val b = baseVectors().select("external_id", "vector")
-      if (meta.dtype == "uint8" || meta.dtype == "int8")
-        b.select(col("external_id"),
-          toColumn(graft.functions.UnpackBytes(toExpression(col("vector")),
-            signed = meta.dtype == "int8")).as("vector"))
-      else b
-    }
-    val merged = upd match {
+    // byte-dtype bases widen to their float view: the merge and the
+    // re-ingest run on floats, and Ingest re-packs under the same dtype
+    val base = StoredVectors.unpack(baseVectors().select("external_id", "vector"), meta.dtype)
+    val merged = visibleUpdates(stored = true) match {
       case None => base
       case Some(u) =>
-        val latest = latestUpdatePerId(u)
-        // The updates log holds RAW vectors, but COSINE non-raw-store bases
-        // (IVF/PQ/VAMANA/...) are stored normalized (normalizeDone=true below
-        // skips re-normalizing the base) — normalize the additions so the
-        // union is uniform. FLAT and BINARY bases stay raw (rawVectorStore),
-        // so their additions must stay raw too.
-        val addsRaw = latest.where(col("vector").isNotNull)
-          .select("external_id", "vector")
-        val adds =
-          if (metric == DistanceMetric.Cosine && !rawVectorStore)
-            addsRaw.select(col("external_id"),
-              vector_normalize(col("vector")).as("vector"))
-          else addsRaw
-        base
-          .join(latest.select("external_id"), Seq("external_id"), "left_anti")
-          .unionByName(adds)
+        base.join(u.masked, Seq("external_id"), "left_anti").unionByName(u.additions)
     }
     // copy-centroids path (reference: index.py:503-577): reuse the active
     // version's centroids instead of re-training k-means.
@@ -422,11 +346,10 @@ abstract class VectorIndex(
     * two-branch merge the distributed path runs, so results match at any
     * nprobe. */
   def localSearcher(): LocalSearcher = {
-    import org.apache.spark.sql.graftshim.{toColumn, toExpression}
     val gate = graft.Conf.long(spark, LocalSearcher.MaxLocalServeBytesKey,
       LocalSearcher.DefaultMaxLocalServeBytes)
     val baseCount =
-      if (historyIdx >= 0 && queryBaseArray) meta.baseSizes(historyIdx) else 0L
+      if (historyIdx >= 0 && window.withBase) meta.baseSizes(historyIdx) else 0L
     // the updates log counts too: between consolidations it can grow
     // arbitrarily, and a gate that ignores it would not actually bound the
     // snapshot (the count is one cheap job over the log window)
@@ -436,40 +359,23 @@ abstract class VectorIndex(
       s"graft: serving snapshot would hold $baseCount base + $updCount logged " +
         s"vectors (~$estBytes bytes) > ${LocalSearcher.MaxLocalServeBytesKey}=$gate; " +
         "consolidate updates or query through Spark instead")
-    val byteDtype = meta.dtype == "uint8" || meta.dtype == "int8"
-    def floatView(df: DataFrame): DataFrame =
-      if (byteDtype)
-        df.withColumn("vector",
-          toColumn(graft.functions.UnpackBytes(toExpression(col("vector")),
-            signed = meta.dtype == "int8")))
-      else df
 
-    val (centroids, blocked) = this match {
-      case ivf: IvfFlatIndex if historyIdx >= 0 && queryBaseArray => (ivf.centroids, true)
-      case _ => (Array.empty[Array[Float]], false)
+    val (centroids, blocked, defaultNprobe) = this match {
+      case ivf: IvfFlatIndex if historyIdx >= 0 && window.withBase =>
+        (ivf.centroids, true, ivf.defaultNprobe(ivf.centroids.length))
+      case _ => (Array.empty[Array[Float]], false, 1)
     }
     val baseCols =
       if (blocked) Seq("external_id", "vector", "partition_id")
       else Seq("external_id", "vector")
-    val upd = updatesInWindow().map(latestUpdatePerId)
-    val maskedBase = upd match {
-      case Some(u) => floatView(baseVectors().select(baseCols.head, baseCols.tail: _*))
-        .join(u.select("external_id"), Seq("external_id"), "left_anti")
-      case None => floatView(baseVectors().select(baseCols.head, baseCols.tail: _*))
-    }
+    val upd = visibleUpdates(stored = true)
+    val base = StoredVectors.unpack(
+      baseVectors().select(baseCols.head, baseCols.tail: _*), meta.dtype)
     val baseRows =
-      if (queryBaseArray) maskedBase.collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    val additions = upd.map { u =>
-      val addsRaw = u.where(col("vector").isNotNull)
-      // cosine non-raw-store bases hold normalized vectors; match for the
-      // extras (FLAT/BINARY bases are raw — extras stay raw there)
-      val adds =
-        if (metric == DistanceMetric.Cosine && !rawVectorStore)
-          addsRaw.select(col("external_id"), vector_normalize(col("vector")).as("vector"))
-        else addsRaw.select("external_id", "vector")
-      adds.collect()
-    }.getOrElse(Array.empty[org.apache.spark.sql.Row])
+      if (!window.withBase) Array.empty[org.apache.spark.sql.Row]
+      else upd.fold(base)(u => base.join(u.masked, Seq("external_id"), "left_anti")).collect()
+    val additions = upd.map(_.additions.collect())
+      .getOrElse(Array.empty[org.apache.spark.sql.Row])
 
     val dims = meta.dimensions
     def toBlock(rows: Seq[org.apache.spark.sql.Row]): (Array[Long], Array[Float]) = {
@@ -501,7 +407,8 @@ abstract class VectorIndex(
       all.map(_._1).toArray, all.map(_._2).toArray,
       if (blocked) centroids else Array.empty,
       alwaysScan,
-      normalizedStore = metric == DistanceMetric.Cosine && !rawVectorStore)
+      normalizedStore = StoredVectors.normalized(meta.indexType, metric),
+      defaultNprobe = defaultNprobe)
   }
 
   /** Compact the updates log when it has accumulated many small fragment
@@ -577,40 +484,47 @@ abstract class VectorIndex(
 
 object VectorIndex {
 
-  /** Conf key: estimated build-side bytes above which the IVF/PQ query joins
-    * switch from `broadcast()` to a shuffled hash join. Broadcast replicates
-    * the per-query probe pairs (and PQ distance tables) to every executor —
-    * fine for interactive batches, a scale-killer at nq=10⁶×nprobe=100
-    * (reference streams query blocks instead, detail/ivf/qv.h:99-153).
-    * Canonical constants live in [[graft.Conf]] (shared with the FLAT
-    * brute-force gate); these aliases keep the established call sites. */
-  val MaxBroadcastBytesKey: String = graft.Conf.MaxBroadcastBytesKey
-  val DefaultMaxBroadcastBytes: Long = graft.Conf.DefaultMaxBroadcastBytes
+  /** The view a handle reads: updates-log rows with `lo` ≤ ts ≤ `hi`, over
+    * the handle's base version when `withBase` (a range open whose start
+    * excludes every base reads the log alone — reference index.py:123-128
+    * query_base_array = False). */
+  final case class ReadWindow(lo: Long, hi: Long, withBase: Boolean)
+
+  /** The in-window log after last-write-wins: `masked` (external_id) is
+    * every id the window wrote, whose base rows it hides; `additions`
+    * (external_id, vector) are the ids whose last write is an upsert. */
+  final case class VisibleUpdates(masked: DataFrame, additions: DataFrame)
 
   /** Pick the join strategy for a query-derived build side from its estimated
-    * size: under the threshold → broadcast hint; over → `shuffle_hash` hint so
-    * the planner partitions both sides on the join key instead of replicating
-    * (the explicit hint also stops Catalyst's own size estimator from
-    * re-broadcasting a side we know is large at scale). */
+    * size: up to `spark.graft.maxBroadcastBytes` → broadcast hint; over →
+    * `shuffle_hash` hint so the planner partitions both sides on the join
+    * key instead of replicating the per-query probe pairs (and PQ distance
+    * tables) to every executor, a scale-killer at nq=10⁶×nprobe=100
+    * (reference streams query blocks instead, detail/ivf/qv.h:99-153). The
+    * explicit hint also stops Catalyst's own size estimator from
+    * re-broadcasting a side we know is large at scale. */
   private[index] def sizedJoinSide(
       spark: SparkSession, df: DataFrame, estBytes: Long): DataFrame = {
-    val max = graft.Conf.long(spark, MaxBroadcastBytesKey, DefaultMaxBroadcastBytes)
+    val max = graft.Conf.long(spark, graft.Conf.MaxBroadcastBytesKey,
+      graft.Conf.DefaultMaxBroadcastBytes)
     if (estBytes <= max) broadcast(df) else df.hint("shuffle_hash")
   }
 
   /** Open an index, optionally at a historical timestamp
     * (reference: index.py:94-177). */
-  def open(spark: SparkSession, uri: String, timestamp: Option[Long] = None): VectorIndex = {
+  def open(spark: SparkSession, uri: String, timestamp: Option[Long] = None): VectorIndex =
+    construct(spark, uri, IndexMeta.read(uri), timestamp.getOrElse(Long.MaxValue), None)
+
+  private def construct(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
+      range: Option[ReadWindow]): VectorIndex = {
     graft.functions.Simd.syncOnce(spark) // no-op unless spark.graft.simd is set
-    val meta = IndexMeta.read(uri)
-    val ts = timestamp.getOrElse(Long.MaxValue)
     meta.indexType match {
-      case "FLAT" => new FlatIndex(spark, uri, meta, ts)
-      case "BINARY" => new BinaryIndex(spark, uri, meta, ts)
-      case "IVF_FLAT" => new IvfFlatIndex(spark, uri, meta, ts)
-      case "IVF_SQ8" => new IvfSq8Index(spark, uri, meta, ts)
-      case "IVF_PQ" => new IvfPqIndex(spark, uri, meta, ts)
-      case "VAMANA" => new VamanaIndex(spark, uri, meta, ts)
+      case "FLAT" => new FlatIndex(spark, uri, meta, ts, range)
+      case "BINARY" => new BinaryIndex(spark, uri, meta, ts, range)
+      case "IVF_FLAT" => new IvfFlatIndex(spark, uri, meta, ts, range)
+      case "IVF_SQ8" => new IvfSq8Index(spark, uri, meta, ts, range)
+      case "IVF_PQ" => new IvfPqIndex(spark, uri, meta, ts, range)
+      case "VAMANA" => new VamanaIndex(spark, uri, meta, ts, range = range)
       case other => throw new IllegalArgumentException(s"unsupported index_type $other")
     }
   }
@@ -642,29 +556,22 @@ object VectorIndex {
       s"graft: openRange start $start must be <= end $end")
     val meta = IndexMeta.read(uri)
     val endTs = end.getOrElse(Long.MaxValue)
-    meta.ingestionTimestamps.headOption match {
+    val (ts, range) = meta.ingestionTimestamps.headOption match {
       case Some(first) if start.exists(_ > first) =>
         // updates-only window (reference index.py:123-128)
-        val idx = open(spark, uri, Some(endTs))
-        idx.queryBaseArray = false
-        idx.updateWindow = (start.get, endTs)
-        idx
+        (endTs, ReadWindow(start.get, endTs, withBase = false))
       case Some(first) if endTs < first =>
-        // window closes before anything existed (reference index.py:139-144)
-        val idx = open(spark, uri, Some(endTs)) // historyIdx < 0: empty base
-        idx.updateWindow = (endTs + 1, endTs) // empty
-        idx
+        // window closes before anything existed (reference index.py:139-144):
+        // no base at endTs and an empty log window
+        (endTs, ReadWindow(endTs + 1, endTs, withBase = true))
       case Some(first) =>
         // first base + updates through end (reference index.py:130-138)
-        val idx = open(spark, uri, Some(first))
-        idx.updateWindow = (first + 1, endTs)
-        idx
+        (first, ReadWindow(first + 1, endTs, withBase = true))
       case None =>
         // nothing ingested yet: the log alone, within the window
-        val idx = open(spark, uri, Some(endTs))
-        idx.updateWindow = (start.getOrElse(0L), endTs)
-        idx
+        (endTs, ReadWindow(start.getOrElse(0L), endTs, withBase = true))
     }
+    construct(spark, uri, meta, ts, Some(range))
   }
 }
 
@@ -736,20 +643,13 @@ private[graft] object Storage {
   * apis/python/src/tiledb/vector_search/flat_index.py:115-147; C++ kernel
   * detail/flat/vq.h:40-120). The Spark plan IS the vq loop: partition-at-a-
   * time scan with per-partition bounded heaps, then a k-bounded merge. */
-class FlatIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
-    extends VectorIndex(spark, uri, meta, ts) {
+class FlatIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
+    range: Option[VectorIndex.ReadWindow] = None)
+    extends VectorIndex(spark, uri, meta, ts, range) {
 
   override def baseVectors(): DataFrame =
-    if (historyIdx < 0) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("external_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("vector",
-            org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)))))
-    } else readVersioned(s"$uri/base/v=$baseTimestamp")
-      .select("external_id", "vector")
+    if (historyIdx < 0) StoredVectors.empty(spark)
+    else readVersioned(s"$uri/base/v=$baseTimestamp").select("external_id", "vector")
 
   override protected def queryBase(queries: DataFrame, k: Int, nprobe: Int,
       allow: Option[DataFrame]): DataFrame = {
@@ -779,8 +679,9 @@ class FlatIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
   * path, which regenerates the sketch for the new base version. No
   * reference analogue (its quantization story is IVF_PQ); this is the
   * sign-sketch classic on the same lifecycle contract. */
-class BinaryIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long)
-    extends VectorIndex(spark, uri, meta, ts) {
+class BinaryIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
+    range: Option[VectorIndex.ReadWindow] = None)
+    extends VectorIndex(spark, uri, meta, ts, range) {
 
   private def sketch(): DataFrame =
     readVersioned(s"$uri/sketch/v=$baseTimestamp")

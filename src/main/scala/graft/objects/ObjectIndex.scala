@@ -489,7 +489,7 @@ object ObjectIndex {
   /** `object_metadata` merged with its incremental updates log: the latest
     * write per external_id wins (base rows count as ts=0) and tombstones
     * drop. The window is per-key over at most one base row plus the id's
-    * log entries — the [[graft.index.VectorIndex.latestUpdatePerId]] shape,
+    * log entries — the [[graft.index.VectorIndex.visibleUpdates]] shape,
     * no corpus-wide ordering. Reads the base table alone (no window at
     * all) when no log exists. */
   def mergedMetadata(spark: SparkSession, uri: String): DataFrame =

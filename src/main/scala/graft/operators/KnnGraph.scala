@@ -231,17 +231,13 @@ object KnnGraph {
       nbrCol: String = "nbr_id",
       labelCol: String = "label"): DataFrame = {
     require(iters >= 1 && iters <= 50, s"graft: iters must be in [1, 50], got $iters")
-    val spark = edges.sparkSession
-    def cut(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val e = cut(edges.select(col(idCol).cast("long").as("__id"),
+    val e = graft.materialize(edges.select(col(idCol).cast("long").as("__id"),
       col(nbrCol).cast("long").as("__nbr")))
     val seed = seeds.select(col(idCol).cast("long").as("__id"),
       col(labelCol).as("__seed"))
     val nodes = e.select(col("__id")).union(e.select(col("__nbr").as("__id")))
       .distinct()
-    var cur = cut(nodes.join(seed, Seq("__id"), "left")
+    var cur = graft.materialize(nodes.join(seed, Seq("__id"), "left")
       .select(col("__id"), col("__seed").as("__lbl")))
     var i = 0
     while (i < iters) {
@@ -256,7 +252,7 @@ object KnnGraph {
       val winner = votes.withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1)
         .select(col("__id"), col("__nlbl").as("__win"))
-      cur = cut(cur.join(winner, Seq("__id"), "left")
+      cur = graft.materialize(cur.join(winner, Seq("__id"), "left")
         .join(seed, Seq("__id"), "left")
         // seeds clamp; otherwise adopt this round's majority, else keep
         .select(col("__id"),

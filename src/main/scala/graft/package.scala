@@ -32,4 +32,18 @@ package object graft {
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(max)) broadcast(df)
     else df.hint("shuffle_hash")
   }
+
+  /** Materialize a frame that is re-read several times, or cut its lineage
+    * inside an iterative loop. With a reliable checkpoint directory set
+    * (`sc.setCheckpointDir`) this is `checkpoint()`, which survives an
+    * executor lost mid-job; pair it with
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (off by
+    * default) so released plans' checkpoint files are deleted. Otherwise
+    * it is `localCheckpoint()`: executor-local blocks that the
+    * ContextCleaner releases once the plan is unreferenced (so repeated
+    * calls do not accumulate storage the way cache() does), but a lost
+    * executor fails the job. */
+  private[graft] def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 }

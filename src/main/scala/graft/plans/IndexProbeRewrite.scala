@@ -103,7 +103,8 @@ object GraftSql {
     }
     viewDf.createOrReplaceTempView(name)
     registered.put((spark, name), (uri, nprobe))
-    // (centroids for the probe rewrite, physical partition column):
+    // (centroids for the probe rewrite, physical partition column, default
+    // probe width):
     // IVF_FLAT, IVF_PQ, and IVF_SQ8 bases prune partition_id on the
     // k-means centroids (the PQ/SQ8 bases store the ORIGINAL vectors
     // beside the codes, so the pruned SQL scan computes exact distances —
@@ -111,25 +112,21 @@ object GraftSql {
     // pruned out of the scan); sharded VAMANA bases prune shard_id on the shard
     // centroids (the routed-search candidate narrowing). Unsharded VAMANA /
     // FLAT have nothing to prune — the view still works as an exact scan.
-    val probeSide: Option[(Array[Array[Float]], String)] = idx match {
+    // The default (nprobe=0) probe width is each engine path's own default:
+    // an IVF type's defaultNprobe (sqrt of the partitions; IVF_PQ probes up
+    // to 100); VAMANA the sweep-derived autoNprobeShards — which is 0 (= do
+    // NOT register a probe, SQL scans stay exact) for geometries the
+    // programmatic queryRouted itself refuses to route (replicas < 3 cannot
+    // clear the 0.85 recall gate at any measured S). An explicit nprobe wins.
+    val probeSide: Option[(Array[Array[Float]], String, Int)] = idx match {
       case ivf: IvfIndex if ivf.centroids.nonEmpty =>
-        Some((ivf.centroids, "partition_id"))
+        Some((ivf.centroids, "partition_id", ivf.defaultNprobe(ivf.centroids.length)))
       case vam: VamanaIndex if vam.shardCentroids.nonEmpty =>
-        Some((vam.shardCentroids, "shard_id"))
+        Some((vam.shardCentroids, "shard_id", vam.autoNprobeShards))
       case _ => None
     }
-    probeSide.foreach { case (centroids, pidCol) =>
-      // default (nprobe=0) probe width mirrors each engine path's own
-      // default: IVF takes the sqrt rule of thumb; VAMANA takes the
-      // sweep-derived autoNprobeShards — which is 0 (= do NOT register a
-      // probe, SQL scans stay exact) for geometries the programmatic
-      // queryRouted itself refuses to route (replicas < 3 cannot clear the
-      // 0.85 recall gate at any measured S). An explicit nprobe wins.
-      val np = if (nprobe > 0) math.min(nprobe, centroids.length)
-        else idx match {
-          case vam: VamanaIndex => vam.autoNprobeShards
-          case _ => math.max(1, math.sqrt(centroids.length.toDouble).toInt)
-        }
+    probeSide.foreach { case (centroids, pidCol, defaultNprobe) =>
+      val np = if (nprobe > 0) math.min(nprobe, centroids.length) else defaultNprobe
       val ts = idx.meta.ingestionTimestamps(idx.meta.historyIndex(Long.MaxValue))
       // superseded versions' centroid arrays would otherwise accumulate
       // in the driver across consolidations

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.dist_cosine
+import graft.materialize
 
 /** Deduplication operators for training-data pipelines, all expressed as
   * declarative DataFrame plans so Catalyst handles pushdown/pruning and the
@@ -21,23 +22,6 @@ object Dedup {
     * the cap fails the job with a pointer to the LSH path. */
   val MaxNgramBlockRowsKey = "spark.graft.ngramJaccard.maxBlockRows"
   val DefaultMaxNgramBlockRows = 100000L
-
-  /** Materialize a frame that is re-read several times (or whose lineage
-    * must be cut inside an iterative loop). When the session has a
-    * reliable checkpoint directory configured (`sc.setCheckpointDir`),
-    * use `checkpoint()` — recoverable if an executor is lost mid-job, which
-    * matters for spot/decommission fleets at the 100 TB design point. Pair
-    * the checkpoint dir with
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (off by
-    * default) so released plans' checkpoint files are deleted; otherwise
-    * they accumulate until application exit.
-    * Otherwise fall back to `localCheckpoint()` (executor-local blocks,
-    * released by the ContextCleaner when the plan is unreferenced — unlike
-    * cache(), repeated dedup calls don't accumulate storage, but a lost
-    * executor fails the job). */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** Exact duplicate groups by content hash: one hash-aggregate, no join.
     * Output: (fp, canonical_id, cnt) with canonical = min id. */

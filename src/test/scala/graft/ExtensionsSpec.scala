@@ -163,6 +163,30 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(df.collect().map(_.getLong(0)).toSet === exact)
   }
 
+  test("an IVF_PQ view registered with the default nprobe answers like query()") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val emb = embFrame
+    val uri = java.nio.file.Files.createTempDirectory("graft_sql_pq_np").toString
+    // one dimension per subspace: the codes barely quantize, so query()'s
+    // exact re-rank of k x kFactor candidates returns the exact top-k of
+    // the partitions it probes (IVF_PQ's default: all 8 of them)
+    val idx = graft.index.Ingest.ingest(spark, uri, emb, "IVF_PQ",
+      graft.operators.DistanceMetric.L2, timestamp = 1000L, partitions = Some(8),
+      numSubspaces = Some(64))
+    graft.plans.GraftSql.registerIndexTable(spark, "vecs_pq_np", uri)
+    for (qid <- 0L until 5L) {
+      val qv = emb.where(col("external_id") === qid).select("vector")
+        .head().getSeq[Float](0).toArray
+      val viaSql = spark.sql(s"SELECT external_id FROM vecs_pq_np " +
+          s"ORDER BY dist_l2(vector, ${qvLit(qv)}), external_id LIMIT 10")
+        .collect().map(_.getLong(0)).toSet
+      val viaApi = idx.query(Seq((qid, qv)).toDF("qid", "qvec"), 10)
+        .select("id").as[Long].collect().toSet
+      assert(viaSql === viaApi, s"query $qid: sql=$viaSql api=$viaApi")
+    }
+  }
+
   test("ORDER BY dist_l2 LIMIT k over a sharded VAMANA table probes shards") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

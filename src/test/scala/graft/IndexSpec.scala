@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{Ingest, VectorIndex}
+import graft.index.{Ingest, Storage, VectorIndex}
 import graft.operators.{DistanceMetric, Knn}
 
 class IndexSpec extends AnyFunSuite {
@@ -153,6 +153,120 @@ class IndexSpec extends AnyFunSuite {
       .query(queries10, 10).count() === 0)
     // consolidation refuses a windowed view
     intercept[IllegalArgumentException] { rUpd.consolidateUpdates(9999L) }
+    // the serving snapshot reads the same window as the Spark path
+    val qvecs = queries10.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    for (h <- Seq(r1, rUpd, rUpd2)) {
+      val searcher = h.localSearcher()
+      assert(qvecs.map { case (qid, qv) => qid -> searcher.query(qv, 10).map(_._1).toSeq }
+        .toMap === gotIds(h.query(queries10, 10)))
+    }
+  }
+
+  // ---- updates-log appends: small synthetic corpora
+
+  private def vecsDf(n: Int, d: Int = 6) = {
+    import spark.implicits._
+    (0 until n).map { i =>
+      (i.toLong, Array.tabulate(d)(j => (i * 31 + j * 7 % 13).toFloat / 7f))
+    }.toDF("external_id", "vector")
+  }
+
+  private def queries(base: org.apache.spark.sql.DataFrame, nq: Int) =
+    base.where(col("external_id") < nq)
+      .select(col("external_id").as("qid"), col("vector").as("qvec"))
+
+  private def resultRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.select(col("qid"), col("id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(identity).toSeq
+
+  // ---- updateDeleteBatch: one append ≡ updateBatch + deleteBatch
+
+  test("updateDeleteBatch serves identically to sequential update+delete batches") {
+    val base = vecsDf(120)
+    val upserts = base.where(col("external_id") % 10 === 1)
+      .select(col("external_id"), reverse(col("vector")).as("vector"))
+      .unionByName(base.where(col("external_id") < 5)
+        .select((col("external_id") + 5000L).as("external_id"),
+          reverse(col("vector")).as("vector")))
+    val deletes = base.where(col("external_id") % 10 === 0).select("external_id")
+
+    val uSeq = tmp()
+    val seqIdx = Ingest.ingest(spark, uSeq, base, "FLAT", DistanceMetric.L2,
+      timestamp = 1000L)
+    seqIdx.updateBatch(upserts, ts = 1100L)
+    seqIdx.deleteBatch(deletes, ts = 1100L)
+
+    val uOne = tmp()
+    val oneIdx = Ingest.ingest(spark, uOne, base, "FLAT", DistanceMetric.L2,
+      timestamp = 1000L)
+    oneIdx.updateDeleteBatch(upserts, deletes, ts = 1100L)
+
+    val q = queries(base, 4)
+    assert(resultRows(VectorIndex.open(spark, uOne).query(q, 8)) ==
+      resultRows(VectorIndex.open(spark, uSeq).query(q, 8)))
+  }
+
+  // ---- appendLogFragments: one write job, N fragment files, same rows
+
+  test("appendLogFragments lays one file per fragment and serves like sequential appends") {
+    val base = vecsDf(150)
+    val uSeq = tmp()
+    val seqIdx = Ingest.ingest(spark, uSeq, base, "FLAT", DistanceMetric.L2,
+      timestamp = 1000L)
+    for (b <- 0 until 4) {
+      seqIdx.deleteBatch(base.where(col("external_id") % 20 === 5 * b), ts = 1100L)
+      seqIdx.updateBatch(base.where(col("external_id") % 20 === 5 * b + 1)
+        .select(col("external_id"), reverse(col("vector")).as("vector")), ts = 1100L)
+    }
+
+    val uOne = tmp()
+    val oneIdx = Ingest.ingest(spark, uOne, base, "FLAT", DistanceMetric.L2,
+      timestamp = 1000L)
+    val nullVec = lit(null).cast("array<float>")
+    val batches = (0 until 4).flatMap { b => Seq(
+      base.where(col("external_id") % 20 === 5 * b)
+        .select(col("external_id"), nullVec.as("vector")),
+      base.where(col("external_id") % 20 === 5 * b + 1)
+        .select(col("external_id"), reverse(col("vector")).as("vector")))
+    }
+    oneIdx.appendLogFragments(
+      batches.zipWithIndex.map { case (df, i) =>
+        df.withColumn("ts", lit(1100L)).withColumn("__frag", lit(i)) }
+        .reduce(_ unionByName _),
+      fragments = batches.length)
+
+    val frags = Storage.listFiles(s"$uOne/updates").count(_._1.endsWith(".parquet"))
+    assert(frags == batches.length,
+      s"expected ${batches.length} fragment files, got $frags")
+    val q = queries(base, 4)
+    assert(resultRows(VectorIndex.open(spark, uOne).query(q, 8)) ==
+      resultRows(VectorIndex.open(spark, uSeq).query(q, 8)))
+  }
+
+  // ---- compaction no-op skip
+
+  test("vacuum after a compaction is a no-op; the >threshold compaction still fires") {
+    val base = vecsDf(100)
+    val u = tmp()
+    val idx = Ingest.ingest(spark, u, base, "FLAT", DistanceMetric.L2,
+      timestamp = 1000L)
+    val nullVec = lit(null).cast("array<float>")
+    val batches = (0 until 12).map { b =>
+      base.where(col("external_id") % 12 === b)
+        .select(col("external_id"), nullVec.as("vector")) }
+    idx.appendLogFragments(
+      batches.zipWithIndex.map { case (df, i) =>
+        df.withColumn("ts", lit(1100L)).withColumn("__frag", lit(i)) }
+        .reduce(_ unionByName _),
+      fragments = 12)
+    def frags() = Storage.listFiles(s"$u/updates").count(_._1.endsWith(".parquet"))
+    assert(frags() == 12)
+    assert(idx.consolidateUpdatesLog(), "12 fragments must trigger compaction")
+    val compacted = frags()
+    assert(compacted < 12)
+    // the old vacuum re-wrote the already-compacted log; now it skips
+    idx.vacuum()
+    assert(frags() == compacted, "vacuum re-wrote an already-compacted log")
   }
 
   test("IVF_PQ: probe-all + full k_factor equals brute force; defaults clear 0.75 gate") {
@@ -586,6 +700,13 @@ class IndexSpec extends AnyFunSuite {
     val merged = emb.where(col("external_id") =!= 7L).unionByName(newVec)
     val exact = exactIds(merged, 10)
     assert(gotIds(after.query(queries10, 10)) === exact)
+    // a range handle keeps its window through withNprobeShards: it serves
+    // only the window's one addition and still refuses consolidation
+    val ranged = VectorIndex.openRange(spark, uri, Some(1100L), None)
+      .asInstanceOf[graft.index.VamanaIndex].withNprobeShards(1)
+    assert(gotIds(ranged.query(queries10, 10)) === queries10.collect()
+      .map(r => r.getLong(0) -> Seq(7L)).toMap)
+    intercept[IllegalArgumentException] { ranged.consolidateUpdates(3000L) }
   }
 
   test("VAMANA incremental consolidation reclaims a failed prior attempt") {
@@ -1118,14 +1239,14 @@ class IndexSpec extends AnyFunSuite {
     // unconditional broadcast of (nq × nprobe) pairs rows breaks at scale
     val allQ = emb.select(col("external_id").as("qid"), col("vector").as("qvec"))
     val expected = idx.query(allQ, 10, nprobe = 16).orderBy("qid", "rank").collect()
-    spark.conf.set(VectorIndex.MaxBroadcastBytesKey, "1")
+    spark.conf.set(Conf.MaxBroadcastBytesKey, "1")
     try {
       val df = idx.query(allQ, 10, nprobe = 16)
       val plan = df.queryExecution.sparkPlan.toString
       assert(!plan.contains("BroadcastHashJoin"), s"still broadcasting:\n${plan.take(2000)}")
       assert(plan.contains("ShuffledHashJoin"), s"no shuffle hash join:\n${plan.take(2000)}")
       assert(df.orderBy("qid", "rank").collect() === expected)
-    } finally spark.conf.unset(VectorIndex.MaxBroadcastBytesKey)
+    } finally spark.conf.unset(Conf.MaxBroadcastBytesKey)
   }
 
   test("IVF_PQ query gates pairs/candidates/qvecs broadcasts on the size threshold") {
@@ -1135,7 +1256,7 @@ class IndexSpec extends AnyFunSuite {
       val idx = ivf8(indexType).asInstanceOf[graft.index.IvfRerankIndex]
       val expected = idx.queryBase(allQ, 10, nprobe0 = 8, kFactor = 50f)
         .orderBy("qid", "rank").collect()
-      spark.conf.set(VectorIndex.MaxBroadcastBytesKey, "1")
+      spark.conf.set(Conf.MaxBroadcastBytesKey, "1")
       try {
         val df = idx.queryBase(allQ, 10, nprobe0 = 8, kFactor = 50f)
         val plan = df.queryExecution.sparkPlan.toString
@@ -1144,7 +1265,7 @@ class IndexSpec extends AnyFunSuite {
         assert(plan.contains("ShuffledHashJoin"),
           s"$indexType no shuffle hash join:\n${plan.take(2000)}")
         assert(df.orderBy("qid", "rank").collect() === expected, indexType)
-      } finally spark.conf.unset(VectorIndex.MaxBroadcastBytesKey)
+      } finally spark.conf.unset(Conf.MaxBroadcastBytesKey)
     }
   }
 

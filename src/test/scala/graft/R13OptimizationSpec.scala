@@ -132,6 +132,19 @@ class R13OptimizationSpec extends AnyFunSuite {
     }
   }
 
+  // ---- NaN distances sort worst in the primitive-keyed frontier
+
+  test("greedySearchDist treats a NaN distance as the worst candidate") {
+    // line graph 0-1-2-3; node 2's distance is NaN — it must come last
+    val adj = Array(Seq(1), Seq(0, 2), Seq(1, 3), Seq(2))
+    val d = Array(0.5f, 1.5f, Float.NaN, 2.5f)
+    val (top, _) = VamanaKernels.greedySearchDist(4, i => d(i), i => adj(i),
+      start = 0, L = 4)
+    assert(top.length == 4)
+    assert(top.last._2 == 2, s"NaN candidate not last: ${top.toSeq}")
+    assert(top.map(_._2).toSeq == Seq(0, 1, 3, 2))
+  }
+
   // ---- buildShardGraphs: one task per shard; topology invariant to the
   //      input's partitioning (insertion order is pinned to external_id)
 

@@ -44,8 +44,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     `make` must not return null.
   *   - [[invalidateUnder]] drops, in every session, the entries whose path
   *     is the prefix or lies under it (`<uri>/base` keeps
-  *     `<uri>/base-other`). `Storage.deleteRecursively` and `Storage.move`
-  *     call it; code that writes in place (appends, overwrites) calls it
+  *     `<uri>/base-other`). `Storage.deleteRecursively`, `Storage.move` and
+  *     `Storage.replaceFiles` call it; code that writes in place (appends, overwrites) calls it
   *     itself. A write by another process, or outside `Storage` with no
   *     call, is not seen until its path is invalidated.
   */

@@ -75,24 +75,40 @@ object IndexDoctor {
 
     // ---- updates log bookkeeping ----
     val logDir = s"$uri/updates"
-    val logExists = Storage.nonEmptyDir(logDir)
-    // queries gate the merge branch on the log DIRECTORY, not the flag
+    val logExists = Storage.hasParquet(logDir)
+    // queries gate the merge branch on the log's fragments, not the flag
     // (VectorIndex.updatesLog), so either drift is bookkeeping, not broken
     // serving — both warn
     if (meta.hasUpdates && !logExists)
       out += Finding("warn", "updates",
-        "hasUpdates is set but the log directory is missing/empty " +
-          "(stale flag; queries gate on the directory and serve correctly)")
+        "hasUpdates is set but the log holds no fragment " +
+          "(stale flag; queries gate on the fragments and serve correctly)")
     if (!meta.hasUpdates && logExists)
       out += Finding("warn", "updates",
         "updates log present but hasUpdates is false — the log still " +
-          "merges into queries (directory-gated); the flag is stale bookkeeping")
+          "merges into queries (fragment-gated); the flag is stale bookkeeping")
     if (logExists) {
       val cols = spark.read.parquet(logDir).columns.toSet
       val need = Set("external_id", "vector", "ts")
       if (!need.subsetOf(cols))
         out += Finding("error", "updates",
           s"log schema $cols missing ${(need -- cols).mkString(", ")}")
+      // rows at or before the oldest kept version are unreachable (reads
+      // before it are empty); an index whose history an earlier release
+      // cleared still holds such fragments
+      ts.headOption.foreach { first =>
+        try {
+          val stale = Storage.logFragments(logDir).count(f => !f.isEmpty && f.maxTs <= first)
+          if (stale > 0)
+            out += Finding("warn", "updates",
+              s"$stale log fragments hold only rows at or before the oldest " +
+                s"kept version ($first), which no read reaches; vacuum() drops them")
+        } catch {
+          case e: Exception =>
+            out += Finding("error", "updates",
+              s"log fragment unreadable: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        }
+      }
     }
     out.toSeq
   }
@@ -180,7 +196,7 @@ object IndexDoctor {
           .select(col("external_id")).distinct()
         val updPath = s"$uri/updates"
         val live =
-          if (Storage.nonEmptyDir(updPath)) {
+          if (Storage.hasParquet(updPath)) {
             val w = org.apache.spark.sql.expressions.Window
               .partitionBy(col("external_id")).orderBy(col("ts").desc)
             val latest = spark.read.parquet(updPath)

@@ -884,13 +884,31 @@ object Ingest {
       .write.mode("overwrite").parquet(s"$uri/sq_params/v=$ts")
   }
 
+  /** Writes `centroids/v=<ts>` and seeds the session's [[storedCentroids]]
+    * entry with the array just written, so the first query of a new
+    * version (after a consolidation, say) does not read it back. */
   private def writeCentroids(
       spark: SparkSession, uri: String, ts: Long, centroids: Array[Array[Float]]): Unit = {
     import spark.implicits._
+    val path = s"$uri/centroids/v=$ts"
     centroids.zipWithIndex
       .map { case (c, i) => (i, c) }
       .toSeq.toDF("partition_id", "centroid")
       .repartition(1)
-      .write.mode("overwrite").parquet(s"$uri/centroids/v=$ts")
+      .write.mode("overwrite").parquet(path)
+    graft.SessionCache.invalidateUnder(path)
+    graft.SessionCache.get(spark, path, "centroids")(centroids)
+    ()
+  }
+
+  /** The centroids stored at `centroids/v=<ts>` (IVF partitions, the
+    * VAMANA shard map) in partition order, memoized per session. */
+  private[index] def storedCentroids(spark: SparkSession, uri: String, ts: Long)
+      : Array[Array[Float]] = {
+    val path = s"$uri/centroids/v=$ts"
+    graft.SessionCache.get(spark, path, "centroids") {
+      graft.SessionCache.parquet(spark, path).orderBy("partition_id").collect()
+        .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
+    }
   }
 }

@@ -37,12 +37,7 @@ abstract class IvfIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: L
   import IvfIndex.Probe
 
   lazy val centroids: Array[Array[Float]] =
-    if (historyIdx < 0) Array.empty
-    else graft.SessionCache.get(spark, s"$uri/centroids/v=$baseTimestamp", "centroids") {
-      readVersioned(s"$uri/centroids/v=$baseTimestamp")
-        .orderBy("partition_id").collect()
-        .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
-    }
+    if (historyIdx < 0) Array.empty else Ingest.storedCentroids(spark, uri, baseTimestamp)
 
   /** Columns the codec stores beside `vector` in every base row. */
   protected def codeColumns: Seq[String]

@@ -558,12 +558,7 @@ class VamanaIndex(spark: SparkSession, uri: String, meta: IndexMeta, ts: Long,
   lazy val shardCentroids: Array[Array[Float]] =
     if (historyIdx < 0 || !Storage.exists(s"$uri/centroids/v=$baseTimestamp"))
       Array.empty
-    else graft.SessionCache.get(spark, s"$uri/centroids/v=$baseTimestamp", "centroids") {
-      readVersioned(s"$uri/centroids/v=$baseTimestamp")
-        .orderBy("partition_id")
-        .collect()
-        .map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
-    }
+    else Ingest.storedCentroids(spark, uri, baseTimestamp)
 
   /** Incremental consolidation: a sharded VAMANA rebuild only needs to
     * re-run the (sequential, expensive) graph kernel for shards whose vector

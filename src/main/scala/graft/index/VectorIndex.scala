@@ -14,11 +14,13 @@ import graft.operators.{DistanceMetric, Knn}
   *   - `index.json`                       group metadata ([[IndexMeta]])
   *   - `base/v=<ts>/`                     vectors of the ingestion at <ts>
   *   - `centroids/v=<ts>/`                IVF centroids of that ingestion
-  *   - `updates/`                         append-only updates log
+  *   - `updates/`                         updates log, append-only until
+  *                                        [[VectorIndex.clearHistory]] or
+  *                                        [[VectorIndex.vacuum]]
   *
   * Time travel (reference: index.py:94-177): a read at `ts` sees the base
   * version with the latest ingestion timestamp ≤ ts plus updates-log entries
-  * in (base_ts, ts].
+  * in (base_ts, ts]; a read before the oldest kept version is empty.
   */
 abstract class VectorIndex(
     val spark: SparkSession,
@@ -37,7 +39,14 @@ abstract class VectorIndex(
     * construction. */
   protected val window: VectorIndex.ReadWindow = range.getOrElse(pointInTime)
 
-  private def pointInTime = VectorIndex.ReadWindow(baseTimestamp + 1, readTimestamp, withBase = true)
+  /** Before the oldest kept version the view is empty, as a range that
+    * closes before it is ([[VectorIndex.openRange]]): the log rows such a
+    * read would reach are the ones [[clearHistory]] drops. An index with
+    * no version at all reads its log alone. */
+  private def pointInTime =
+    if (historyIdx < 0 && meta.ingestionTimestamps.nonEmpty)
+      VectorIndex.ReadWindow(readTimestamp + 1, readTimestamp, withBase = true)
+    else VectorIndex.ReadWindow(baseTimestamp + 1, readTimestamp, withBase = true)
 
   /** Maintenance entry points fold "everything visible now" back into
     * storage — on a windowed view that would silently drop out-of-window
@@ -184,23 +193,26 @@ abstract class VectorIndex(
 
   private def updatesPath: String = s"$uri/updates"
 
-  /** The updates log, None when its directory is missing or empty. Every
-    * log mutator invalidates [[updatesPath]], re-arming this and the
-    * window probe below. */
+  /** The updates log, None when it holds no fragment. Every log mutator
+    * invalidates [[updatesPath]], re-arming this and the window probe
+    * below. */
   private def updatesLog(): Option[DataFrame] =
     graft.SessionCache.get(spark, updatesPath, "updatesLog") {
-      if (Storage.nonEmptyDir(updatesPath)) Some(spark.read.parquet(updatesPath))
+      if (Storage.hasParquet(updatesPath)) Some(spark.read.parquet(updatesPath))
       else None
     }
 
   /** Log rows with ts in [[window]] (both bounds inclusive), None when
     * there are none. The emptiness probe is one isEmpty job, so it is
     * memoized per window. */
-  private def updatesInWindow(): Option[DataFrame] = updatesLog().flatMap { log =>
+  private def updatesInWindow(): Option[DataFrame] = {
     val VectorIndex.ReadWindow(lo, hi, _) = window
-    val w = log.where(col("ts") >= lo && col("ts") <= hi)
-    if (graft.SessionCache.get(spark, updatesPath, ("windowEmpty", lo, hi))(w.isEmpty)) None
-    else Some(w)
+    if (lo > hi) None
+    else updatesLog().flatMap { log =>
+      val w = log.where(col("ts") >= lo && col("ts") <= hi)
+      if (graft.SessionCache.get(spark, updatesPath, ("windowEmpty", lo, hi))(w.isEmpty)) None
+      else Some(w)
+    }
   }
 
   /** The in-window log resolved last-write-wins per external id (the
@@ -266,8 +278,7 @@ abstract class VectorIndex(
     * them. */
   private def appendLog(rows: DataFrame, fragments: Int = 0): Unit = {
     import spark.implicits._
-    val logCols = Seq(col("external_id").cast("long"), col("vector").cast("array<float>"),
-      col("ts").cast("long"))
+    val logCols = VectorIndex.LogSchema.map(f => col(f.name).cast(f.dataType))
     val out =
       if (fragments <= 0) rows.select(logCols: _*)
       else spark.createDataset(rows.select(logCols :+ col("__frag").cast("int"): _*)
@@ -413,34 +424,74 @@ abstract class VectorIndex(
 
   /** Compact the updates log when it has accumulated many small fragment
     * files (reference: index.py:837-858 auto-consolidates the updates array
-    * after >10 fragments): rewrite the log directory into ~128 MB output
-    * files — one file only while the log is small, parallel writers once it
-    * grows, so compaction never funnels a large log through a single task. */
+    * after >10 fragments since the last ingest). Only the fragments newer
+    * than the newest base count and are rewritten: a fragment whose rows
+    * that base already folded in stays as it is until [[clearHistory]] or
+    * [[vacuum]] drops it. The rewrite targets ~128 MB output files — one
+    * file while the log is small, parallel writers once it grows, so
+    * compaction never funnels a large log through a single task. */
   def consolidateUpdatesLog(maxFragments: Int = 10): Boolean = {
-    updatesLog() match {
-      case Some(log) =>
-        val frags = Storage.listFiles(updatesPath)
-          .filter(_._1.endsWith(".parquet"))
-        val totalBytes = frags.map(_._2).sum
-        val nOut = math.max(1, (totalBytes / (128L << 20)).toInt)
-        // already at (or below) the target layout → rewriting would produce
-        // the same file count again for a full read+write of the log; skip.
-        // This makes vacuum() after a compaction a no-op instead of a
-        // second identical rewrite (r13 round profiled exactly that pair).
-        if (frags.length > maxFragments && frags.length > nOut) {
-          val tmp = s"$uri/updates_compact"
-          log.repartition(nOut).write.mode("overwrite").parquet(tmp)
-          Storage.deleteRecursively(updatesPath)
-          Storage.move(tmp, updatesPath)
-          true
-        } else false
-      case None => false
-    }
+    val newest = meta.ingestionTimestamps.lastOption.getOrElse(Long.MinValue)
+    val unfolded = Storage.logFragments(updatesPath).filter(_.maxTs > newest)
+    // already at (or below) the target layout → rewriting would produce
+    // the same file count again for a full read+write of the log; skip.
+    // This makes vacuum() after a compaction a no-op instead of a
+    // second identical rewrite.
+    val rewrite = unfolded.length > maxFragments && unfolded.length > outFiles(unfolded)
+    if (rewrite)
+      Storage.replaceFiles(updatesPath, unfolded.map(_.name), Some(stage(unfolded, after = None)))
+    rewrite
   }
 
-  /** Remove obsolete storage: compacts the updates log and is the hook for
-    * dropping superseded fragments (reference: index.py:579-598 `vacuum`). */
-  def vacuum(): Unit = { consolidateUpdatesLog(maxFragments = 0); () }
+  /** Remove obsolete storage (reference: index.py:579-598 `vacuum`): drops
+    * the log fragments no read can reach, those whose rows all lie at or
+    * before the oldest kept version (an index whose history an earlier
+    * release cleared still holds them), then compacts what is left. */
+  def vacuum(): Unit = {
+    meta.ingestionTimestamps.headOption.foreach { cut =>
+      if (!truncateLog(cut)) {
+        val m = IndexMeta.read(uri)
+        if (m.hasUpdates) IndexMeta.write(uri, m.copy(hasUpdates = false))
+      }
+    }
+    consolidateUpdatesLog(maxFragments = 0)
+    ()
+  }
+
+  /** Output file count for rewriting `frags`: one per ~128 MB. */
+  private def outFiles(frags: Seq[Storage.LogFragment]): Int =
+    math.max(1, (frags.map(_.bytes).sum / (128L << 20)).toInt)
+
+  /** Write the rows of the log fragments `frags` (those with ts > `after`,
+    * all of them when None) as [[outFiles]] new fragments into a staging
+    * directory beside the log, and return it; the rest of the log is not
+    * read. [[Storage.replaceFiles]] then swaps them in. */
+  private def stage(frags: Seq[Storage.LogFragment], after: Option[Long]): String = {
+    val staged = s"$uri/updates_compact"
+    val rows = spark.read.schema(VectorIndex.LogSchema)
+      .parquet(frags.map(f => s"$updatesPath/${f.name}"): _*)
+    after.fold(rows)(t => rows.where(col("ts") > t))
+      .repartition(outFiles(frags)).write.mode("overwrite").parquet(staged)
+    staged
+  }
+
+  /** Drop the log rows with ts ≤ `cut`, the oldest kept ingestion: no read
+    * reaches them — a point-in-time read at a kept timestamp starts past
+    * its base, an earlier one is empty, and [[VectorIndex.openRange]] pins
+    * to the first kept base (reference index.py:626-735 deletes the update
+    * fragments before the timestamp too). Fragments wholly at or before
+    * `cut` are deleted, fragments straddling it are rewritten with their
+    * later rows, the others are left as they are; with no fragment left
+    * the log directory goes. Returns whether any fragment is left. */
+  private def truncateLog(cut: Long): Boolean = {
+    val (gone, kept) = Storage.logFragments(updatesPath).partition(_.maxTs <= cut)
+    val straddling = kept.filter(_.minTs <= cut)
+    if (kept.isEmpty) Storage.deleteRecursively(updatesPath)
+    else if (gone.nonEmpty || straddling.nonEmpty)
+      Storage.replaceFiles(updatesPath, (gone ++ straddling).map(_.name),
+        if (straddling.isEmpty) None else Some(stage(straddling, after = Some(cut))))
+    kept.nonEmpty
+  }
 
   /** Per-partition vector counts + CSR-style cumulative offsets — the
     * partition stats the reference materializes as `partition_indexes`
@@ -461,8 +512,9 @@ abstract class VectorIndex(
       coalesce(sum(col("cnt")).over(w), lit(0L)))
   }
 
-  /** Drop base versions strictly older than `ts` and rewrite metadata
-    * (reference: index.py:626-735 `clear_history`). */
+  /** Drop base versions strictly older than `ts` and the log rows no kept
+    * version reaches ([[truncateLog]]), and rewrite metadata (reference:
+    * index.py:626-735 `clear_history`). */
   def clearHistory(ts: Long): Unit = {
     val keep = meta.ingestionTimestamps.zipWithIndex.filter { case (t, _) => t >= ts }
     val dropTs = meta.ingestionTimestamps.filter(_ < ts)
@@ -474,11 +526,13 @@ abstract class VectorIndex(
       Storage.deleteRecursively(s"$uri/sketch/v=$t") // BINARY sign sketch
       Storage.deleteRecursively(s"$uri/sq_params/v=$t") // IVF_SQ8 quantizer
     }
+    val logLeft = keep.headOption.fold(meta.hasUpdates) { case (cut, _) => truncateLog(cut) }
     val keepIdx = keep.map(_._2).toSet
     IndexMeta.write(uri, meta.copy(
       ingestionTimestamps = keep.map(_._1),
       baseSizes = meta.baseSizes.zipWithIndex.collect { case (s, i) if keepIdx(i) => s },
-      partitionHistory = meta.partitionHistory.zipWithIndex.collect { case (p, i) if keepIdx(i) => p }))
+      partitionHistory = meta.partitionHistory.zipWithIndex.collect { case (p, i) if keepIdx(i) => p },
+      hasUpdates = logLeft))
   }
 }
 
@@ -494,6 +548,10 @@ object VectorIndex {
     * every id the window wrote, whose base rows it hides; `additions`
     * (external_id, vector) are the ids whose last write is an upsert. */
   final case class VisibleUpdates(masked: DataFrame, additions: DataFrame)
+
+  /** The updates log's columns; a null `vector` is a tombstone. */
+  private val LogSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "external_id BIGINT, vector ARRAY<FLOAT>, ts BIGINT")
 
   /** Pick the join strategy for a query-derived build side from its estimated
     * size: up to `spark.graft.maxBroadcastBytes` → broadcast hint; over →
@@ -603,12 +661,77 @@ private[graft] object Storage {
   }
 
   /** (name, length) of the plain files directly under `p`. */
-  def listFiles(p: String): Seq[(String, Long)] = {
+  def listFiles(p: String): Seq[(String, Long)] =
+    files(p).map(s => (s.getPath.getName, s.getLen))
+
+  private def files(p: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val h = new org.apache.hadoop.fs.Path(p)
     val fs = fsOf(h)
     if (!fs.exists(h)) Seq.empty
-    else fs.listStatus(h).filter(_.isFile)
-      .map(s => (s.getPath.getName, s.getLen)).toSeq
+    else fs.listStatus(h).filter(_.isFile).toSeq
+  }
+
+  private def parquetFiles(p: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    files(p).filter(_.getPath.getName.endsWith(".parquet"))
+
+  /** Whether `p` holds a `.parquet` file directly: what Spark needs to
+    * read it. A directory holding only `_SUCCESS`/`.crc` files is
+    * non-empty but has no schema to infer. */
+  def hasParquet(p: String): Boolean = parquetFiles(p).nonEmpty
+
+  /** One updates-log fragment: a `.parquet` file directly under the log
+    * directory, its length, and the range of its `ts` column. */
+  final case class LogFragment(name: String, bytes: Long, minTs: Long, maxTs: Long) {
+    /** No rows: a write task whose partition was empty still leaves a file. */
+    def isEmpty: Boolean = minTs > maxTs
+  }
+
+  /** The updates-log fragments under `dir`: one listing, and each
+    * fragment's ts range from its footer statistics, read on the driver
+    * (no Spark job). The footers open with the session's Hadoop conf; the
+    * no-options open builds a fresh `Configuration` per file, ~7 ms each.
+    * A fragment with no ts statistics reports the widest range, so no
+    * maintenance step drops or skips it unread; one with no rows reports
+    * an empty range and counts as folded. */
+  def logFragments(dir: String): Seq[LogFragment] = {
+    import scala.jdk.CollectionConverters._
+    val c = conf()
+    val opts = org.apache.parquet.HadoopReadOptions.builder(c).build()
+    parquetFiles(dir).map { st =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, c), opts)
+      val ranges =
+        try reader.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).map { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == "ts").map(_.getStatistics)
+            .filter(s => s != null && s.hasNonNullValue)
+            .map(s => (s.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+              s.genericGetMax.asInstanceOf[java.lang.Long].longValue))
+            .getOrElse((Long.MinValue, Long.MaxValue))
+        }
+        finally reader.close()
+      LogFragment(st.getPath.getName, st.getLen,
+        ranges.map(_._1).foldLeft(Long.MaxValue)(math.min),
+        ranges.map(_._2).foldLeft(Long.MinValue)(math.max))
+    }
+  }
+
+  /** Swap files of `dir`: move every `.parquet` file of `staged` into
+    * `dir`, then delete the files named `drop` there, then `staged`. In
+    * this order a crash can leave a rewritten row twice — identical
+    * copies, which last-write-wins resolves to the same answer — but never
+    * lose it. Invalidates the session cache under `dir` once. */
+  def replaceFiles(dir: String, drop: Seq[String], staged: Option[String]): Unit = {
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsOf(d)
+    staged.foreach { s =>
+      parquetFiles(s).map(_.getPath).foreach { f =>
+        require(fs.rename(f, new org.apache.hadoop.fs.Path(d, f.getName)),
+          s"graft: rename $f -> $dir failed")
+      }
+    }
+    drop.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(d, n), false))
+    staged.foreach(s => fs.delete(new org.apache.hadoop.fs.Path(s), true))
+    graft.SessionCache.invalidateUnder(dir)
   }
 
   def deleteRecursively(p: String): Unit = {

@@ -808,13 +808,74 @@ class IndexSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$uri/base/v=1000")))
     // vacuum: many small update fragments -> compacted
     val reopened = VectorIndex.open(spark, uri)
+    // a write at or before the oldest kept version no read reaches: the
+    // doctor counts its fragment and vacuum drops it
+    reopened.deleteBatch(emb.where(col("external_id") === 7), ts = 1900L)
+    assert(graft.index.IndexDoctor.check(spark, uri).exists(f =>
+      f.check == "updates" && f.detail.startsWith("1 log fragments")))
     (0 until 5).foreach { i =>
       reopened.deleteBatch(emb.where(col("external_id") === i), ts = 2100L + i)
     }
     reopened.vacuum()
+    assert(logTs(uri).sorted === (2100L until 2105L))
+    assert(graft.index.IndexDoctor.check(spark, uri).isEmpty)
     val expected = exactIds(emb.where(col("external_id") >= 5), 10)
     assert(gotIds(VectorIndex.open(spark, uri).query(queries10, 10)) === expected)
+
+    // the straddling case: twelve fragments, each with rows on both sides
+    // of the cut — re-vectors and additions at 1100 (folded into v=1200)
+    // and tombstones at 1300 — compacted into one fragment
+    val s = tmp()
+    val base = vecsDf(120)
+    val sIdx = Ingest.ingest(spark, s, base, "FLAT", DistanceMetric.L2, timestamp = 1000L)
+    sIdx.appendLogFragments((0 until 12).map { f =>
+      val band = base.where(col("external_id") % 12 === f)
+      band.select(col("external_id"), reverse(col("vector")).as("vector"), lit(1100L).as("ts"))
+        .unionByName(band.select((col("external_id") + 5000L).as("external_id"),
+          col("vector"), lit(1100L).as("ts")))
+        .unionByName(band.where(col("external_id") % 5 === 0).select(col("external_id"),
+          lit(null).cast("array<float>").as("vector"), lit(1300L).as("ts")))
+        .withColumn("__frag", lit(f))
+    }.reduce(_ unionByName _), fragments = 12)
+    VectorIndex.open(spark, s, Some(1200L)).consolidateUpdates(1200L)
+    assert(VectorIndex.open(spark, s).consolidateUpdatesLog())
+    assert(Storage.listFiles(s"$s/updates").count(_._1.endsWith(".parquet")) === 1)
+    val q = queries(base, 4)
+    def views(): Seq[Seq[(Long, Long)]] =
+      (Seq(Some(1200L), Some(1250L), Some(1300L), None).map(t => VectorIndex.open(spark, s, t)) :+
+        VectorIndex.openRange(spark, s, Some(0L), None)).map(v => resultRows(v.query(q, 8)))
+    val beforeClear = views()
+    VectorIndex.open(spark, s).clearHistory(1200L)
+    assert(views() === beforeClear)
+    assert(logTs(s).nonEmpty && logTs(s).forall(_ > 1200L), "rows at or before the cut remain")
+    // before the oldest kept version the view is empty, as for a range
+    // closing before the first ingestion
+    assert(VectorIndex.open(spark, s, Some(1150L)).query(q, 8).count() === 0)
+
+    // a clearHistory that drops every fragment removes the log and clears
+    // hasUpdates; the index still serves and takes writes
+    VectorIndex.open(spark, s).consolidateUpdates(1400L)
+    VectorIndex.open(spark, s).clearHistory(1400L)
+    assert(!Storage.exists(s"$s/updates") && !graft.index.IndexMeta.read(s).hasUpdates)
+    // a log directory with no fragment reads as no log
+    Files.createDirectories(java.nio.file.Paths.get(s"$s/updates"))
+    Files.createFile(java.nio.file.Paths.get(s"$s/updates/_SUCCESS"))
+    graft.SessionCache.invalidateUnder(s"$s/updates")
+    assert(graft.index.IndexDoctor.check(spark, s).isEmpty)
+    val cleared = VectorIndex.open(spark, s)
+    assert(resultRows(cleared.query(q, 8)) === beforeClear.last)
+    val qv = q.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val searcher = cleared.localSearcher()
+    assert(qv.toSeq.flatMap { case (qid, v) => searcher.query(v, 8).map(h => (qid, h._1)) }
+      .sorted === beforeClear.last)
+    cleared.updateBatch(base.where(col("external_id") === 0L)
+      .select(lit(9999L).as("external_id"), col("vector")), ts = 1500L)
+    assert(resultRows(VectorIndex.open(spark, s).query(q, 8)).contains((0L, 9999L)))
   }
+
+  private def logTs(uri: String): Seq[Long] =
+    if (!Storage.hasParquet(s"$uri/updates")) Nil
+    else spark.read.parquet(s"$uri/updates").select("ts").collect().map(_.getLong(0)).toSeq
 
   test("uint8 FLAT index: byte-packed storage, asymmetric float-query kernels") {
     import spark.implicits._
@@ -1188,6 +1249,19 @@ class IndexSpec extends AnyFunSuite {
     assert(files === 1, s"small log should compact to one file, got $files")
     // rows survive compaction and the read-merge path still sees them
     assert(spark.read.parquet(s"$uri/updates").count() === 12)
+    // fragments the newest base folded in neither count toward the
+    // threshold nor get rewritten
+    val folded = idx.consolidateUpdates(2000L)
+    def names() = Storage.listFiles(s"$uri/updates").map(_._1).filter(_.endsWith(".parquet")).toSet
+    val foldedNames = names()
+    def fragments(n: Int, ts: Long): Unit =
+      folded.appendLogFragments(emb.where(col("external_id") < n).select(col("external_id"),
+        col("vector"), lit(ts).as("ts"), col("external_id").cast("int").as("__frag")), n)
+    fragments(10, 2100L)
+    assert(!folded.consolidateUpdatesLog(), "10 unfolded fragments are within the threshold")
+    fragments(1, 2200L)
+    assert(folded.consolidateUpdatesLog())
+    assert(foldedNames.subsetOf(names()) && names().size === foldedNames.size + 1)
   }
 
   test("VAMANA consolidate preserves lBuild/rMaxDegree and shard count") {
